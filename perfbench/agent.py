@@ -24,9 +24,6 @@ from perfbench import metrics, oracle
 from perfbench.traffic import TABLES, AgentStream, Request, warmup_requests
 
 HEALTH_TIMEOUT_S = 150
-# Untimed warm-up: one catalogue walk and one call per template, cut off
-# after this long (first calls of a shape pay JIT and codegen).
-WARMUP_S = 15.0
 CALL_TIMEOUT_S = 120
 SERVER_NAME = "mcp-clickhouse-spark"
 
@@ -119,19 +116,17 @@ def drive(port: int, seed: int, seconds: float, clients: int, on_start=None) -> 
     """Warm up untimed, then run the closed loop for at least ``seconds``.
     ``on_start`` is called just before the clock starts."""
     pool = [Client(port, f"c{i}") for i in range(clients)]
-    # client 0 walks the catalogue once (about as long as four queries)
-    # while the others take the rest, so that every template shape has run
-    # once before the clock starts
+    # Untimed warm-up, run to the end: client 0 walks the catalogue once
+    # (about as long as four queries) while the others take the rest, so
+    # that every template shape has paid its first-call costs (JIT,
+    # codegen) before the clock starts
     warm = warmup_requests()
     walk = AgentStream("warmup", 0).session()[:3]
     share = [walk + warm[7:]] + [warm[i:7:clients - 1] for i in range(clients - 1)]
     t_warm = time.perf_counter()
-    warm_until = t_warm + WARMUP_S
 
     def warm_up(i: int) -> None:
         for req in share[i]:
-            if time.perf_counter() >= warm_until:
-                return
             pool[i].call(req, record=False)
 
     _in_threads([lambda i=i: warm_up(i) for i in range(clients)])

@@ -7,7 +7,9 @@ shapes the final JSON line.
 
 from __future__ import annotations
 
+import json
 import statistics
+from pathlib import Path
 
 from perfbench.traffic import PIPELINE_OPS
 
@@ -15,39 +17,16 @@ SERVED_LAYERS = (
     "mcp_server", "tools", "executor", "readonly", "dialect", "sources",
     "session", "catalog", "pagination",
 )
-PER_LAYER = (
-    *(f"{layer}.self_ms" for layer in SERVED_LAYERS),
-    "trace.round_trip_ms", "trace.remainder_ms", "trace.self_sum_error_ms",
-    "trace.latency_p50_ms", "trace.requests",
-    "mcp_server.encode_ms", "mcp_server.response_kb",
-    "executor.queue_wait_ms", "executor.timeouts",
-    "readonly.check_ms", "readonly.plan_check_ms", "readonly.rejected",
-    "dialect.settings_ms", "dialect.translate_ms", "sources.bind_ms",
-    "session.analyze_ms", "session.execute_fetch_ms",
-    "session.jobs_per_call", "session.stages_per_call", "session.tasks_per_call",
-    "session.task_ms_per_call", "session.shuffle_read_mb", "session.shuffle_write_mb",
-    "session.spill_mb", "session.get_spark_ms", "session.register_ms",
-    "catalog.list_ms", "catalog.describe_ms", "catalog.jobs_per_describe",
-    "pagination.mint_ms", "pagination.consume_ms", "pagination.token_hit_ratio",
-    "inventory.build_ms", "inventory.plan_cache_hit_ratio",
-    *(f"pipeline.{op}_ms" for op in PIPELINE_OPS),
-    "error_rate", "peak_rss_mb",
-)
-
-
-def unit_of(name: str) -> str:
-    base = name.removesuffix("_per_call")
-    for suffix, unit in (("_ms", "ms"), ("_kb", "KiB"), ("_mb", "MiB"), ("_ratio", "ratio"),
-                         ("_rps", "1/s"), ("_s", "s")):
-        if base.endswith(suffix):
-            return unit
-    return "ratio" if name == "error_rate" else "count"
+# BENCHMARK.json, next to this directory, names every metric and its unit.
+_SPEC = json.loads((Path(__file__).resolve().parent.parent / "BENCHMARK.json").read_text())
+UNITS = {m["name"]: m["unit"] for m in _SPEC["end_to_end"] + _SPEC["per_layer"]}
+PER_LAYER = tuple(m["name"] for m in _SPEC["per_layer"])
 
 
 def result(correct: bool, attempted: int, failed: int, values: dict[str, float]) -> dict:
     return {
         "correct": correct, "attempted": attempted, "failed": failed,
-        "metrics": {k: {"value": v, "unit": unit_of(k)} for k, v in values.items()},
+        "metrics": {k: {"value": v, "unit": UNITS[k]} for k, v in values.items()},
     }
 
 
@@ -55,7 +34,7 @@ def end_to_end(lat_ms: list[float], elapsed_s: float, batch_s: float, setup_s: f
     return {
         "setup_s": setup_s,
         "latency_p50_ms": statistics.median(lat_ms),
-        "latency_p90_ms": statistics.quantiles(lat_ms, n=10)[-1],
+        "latency_p70_ms": statistics.quantiles(lat_ms, n=10)[6] if len(lat_ms) > 1 else lat_ms[0],
         "throughput_rps": len(lat_ms) / elapsed_s,
         "batch_s": batch_s,
     }
@@ -90,7 +69,7 @@ def batch_metrics(host: dict) -> dict[str, float]:
         "session.spill_mb": spark_med(costs, "spill") / 2**20,
         "inventory.build_ms": _median([c["build_ms"] for c in traced]),
         "inventory.plan_cache_hit_ratio": _mean([float(c["plan_hit"]) for c in traced]),
-        "trace.latency_p50_ms": _median([c["ms"] for c in traced]),
+        "trace.latency_p50_ms": _median([p * 1e3 for p in host["passes"]]),
         "trace.requests": len(traced),
     })
     for op in PIPELINE_OPS:

@@ -10,13 +10,10 @@ does.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import math
 import os
 from datetime import date, datetime
 from decimal import Decimal, InvalidOperation
-from pathlib import Path
 
 import duckdb
 
@@ -65,22 +62,11 @@ def rowset(columns: list[str], rows: list) -> list[tuple]:
     return sorted(tuple(canon(r[i]) for i in order) for r in rows)
 
 
-def expected(con: duckdb.DuckDBPyConnection, sql: str, cache: Path | None = None):
-    """(columns, canonical rows) of ``sql``; with ``cache``, kept in that
-    directory keyed by the SQL, for answers that do not vary by seed."""
-    path = cache / f"{hashlib.sha256(sql.encode()).hexdigest()[:32]}.json" if cache else None
-    if path is not None and path.exists():
-        cols, rows = json.loads(path.read_text())
-        return cols, [tuple(r) for r in rows]
+def expected(con: duckdb.DuckDBPyConnection, sql: str):
+    """(columns, canonical rows) of ``sql``."""
     cur = con.execute(sql)
     cols = [d[0] for d in cur.description]
-    out = cols, rowset(cols, cur.fetchall())
-    if path is not None:
-        cache.mkdir(parents=True, exist_ok=True)
-        tmp = path.with_suffix(f".{os.getpid()}.tmp")
-        tmp.write_text(json.dumps(out))
-        os.replace(tmp, path)
-    return out
+    return cols, rowset(cols, cur.fetchall())
 
 
 def compare(want: tuple[list[str], list[tuple]], columns: list[str], rows: list) -> str | None:

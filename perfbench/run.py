@@ -19,8 +19,8 @@ Workloads:
                   ``__spark_entry__.queries()``, each materialised with
                   ``toArrow()``.  No tool path.
 
-The input data is generated once per checkout (datagen.py, fixed seed) into
-``.perfbench_work/``; the seed varies only the requests.
+The input data is the sf0.1 testdata, committed under ``perfbench/data/``;
+the seed varies only the requests.  Scratch files go to ``.perfbench_work/``.
 """
 
 from __future__ import annotations
@@ -43,10 +43,9 @@ sys.path.insert(0, str(HERE.parent))
 
 from perfbench import metrics  # noqa: E402
 
-SF = 0.1
 CLIENTS = 2
+DATA = HERE / "data" / "sf0.1"
 WORK = ROOT / ".perfbench_work"
-DATA_VERSION = 1
 # A run must end within 180 s: a batch host gets this long in all, a
 # serving host this long to stop once told to.
 BATCH_TIMEOUT_S = 150
@@ -54,22 +53,6 @@ STOP_TIMEOUT_S = 60
 
 
 # --- engine process --------------------------------------------------------------
-
-
-def ensure_data() -> Path:
-    """The warehouse input, generated once per checkout."""
-    from perfbench import datagen
-
-    data = WORK / f"data-sf{SF}-v{DATA_VERSION}"
-    if not data.is_dir():
-        tmp = WORK / f"data-tmp-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        datagen.generate(str(tmp), SF)
-        try:
-            os.rename(tmp, data)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # another run got there first
-    return data
 
 
 def engine_env(run_dir: Path, data: Path) -> dict:
@@ -172,7 +155,8 @@ def agent_session(args, run_dir: Path, env: dict) -> dict:
         log(f"set-up {setup_s:.1f} s")
         run = agent.drive(port, args.seed, args.seconds, CLIENTS,
                           on_start=(lambda: engine.signal(signal.SIGUSR1)) if args.trace else None)
-        log(f"warm-up {run['warmup_s']:.1f} s, timed loop {run['elapsed']:.1f} s")
+        log(f"warm-up {run['warmup_s']:.1f} s, timed loop {run['elapsed']:.1f} s, sessions "
+            + " ".join(f"{s:.2f}" for s in run["sessions_s"]))
         engine.signal(signal.SIGTERM)
         host = engine.wait(STOP_TIMEOUT_S)
         log("engine stopped")
@@ -186,7 +170,8 @@ def agent_session(args, run_dir: Path, env: dict) -> dict:
 def pipeline_batch(args, run_dir: Path, env: dict) -> dict:
     engine = Engine("batch", run_dir, env, args)
     host = engine.wait(BATCH_TIMEOUT_S)
-    log(", ".join(f"{k} {v:.1f}" for k, v in host["phases"].items()))
+    log(", ".join(f"{k} {v:.1f}" for k, v in host["phases"].items()) + ", passes "
+        + " ".join(f"{p:.2f}" for p in host["passes"]))
     for f in host["failures"]:
         print(f"FAILED {f['op']}: {f['error']}", file=sys.stderr)
     calls = host["calls"]
@@ -194,8 +179,10 @@ def pipeline_batch(args, run_dir: Path, env: dict) -> dict:
         values = metrics.batch_metrics(host)
         values.update(metrics.process_values(host, host["failed_calls"], len(calls)))
     else:
-        passes = host["passes"] or [host["elapsed_s"]]
-        values = metrics.end_to_end([c["ms"] for c in calls], host["elapsed_s"],
+        # the caller's unit of work is a pass: an operator-call median would
+        # sit between two operators' costs and jump from run to run
+        passes = host["passes"]
+        values = metrics.end_to_end([p * 1e3 for p in passes], host["elapsed_s"],
                                     statistics.median(passes), host["setup_s"])
     return metrics.result(not host["failures"], len(calls), host["failed_calls"], values)
 
@@ -214,13 +201,12 @@ def main() -> int:
         print("run from the repository root: mcp_clickhouse_spark/ not found", file=sys.stderr)
         return 2
     WORK.mkdir(exist_ok=True)
-    data = ensure_data()
     run_dir = WORK / f"run-{os.getpid()}"
     shutil.rmtree(run_dir, ignore_errors=True)
     run_dir.mkdir()
     t0 = time.time()
     try:
-        result = WORKLOADS[args.workload](args, run_dir, engine_env(run_dir, data))
+        result = WORKLOADS[args.workload](args, run_dir, engine_env(run_dir, DATA))
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
     log(f"run took {time.time() - t0:.1f} s")

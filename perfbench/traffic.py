@@ -153,7 +153,7 @@ def t_yearly(r: random.Random) -> Request:
 
 
 def t_running_qty(r: random.Random) -> Request:
-    lo = r.randint(0, 14_000)
+    lo = r.randint(0, 149_899)  # o_orderkey runs 0..149,999 at sf0.1
     hi = lo + 100
     return _q(
         "running_qty", "run_embedded_select_query", "clickhouse",
@@ -273,7 +273,7 @@ class AgentStream:
         return calls
 
 
-def pipeline_order(seed: int, passes: int) -> list[list[str]]:
+def pipeline_order(seed, passes: int) -> list[list[str]]:
     """Seed-permuted operator order for each pass."""
     r = random.Random(f"pipeline:{seed}")
     out = []
