@@ -140,7 +140,7 @@ def main() -> None:
     # parallelism knobs, so a cross-core-count comparison is interpretable.
     # At small SFs the bytes-derived shuffle-partition floor (8) and the
     # small-table scan-split cap (8 files) bound most stages at 8 tasks
-    # regardless of cores — tables >= 500k rows scale their scan split with
+    # regardless of cores — tables >= 1M rows scale their scan split with
     # max(8, cpus // 2) (session._split_file_cap), which is where 8-vs-32
     # core runs genuinely diverge once the data is big enough.
     from mcp_clickhouse_spark.session import _split_file_cap

@@ -24,6 +24,7 @@ Tie semantics: a right row with ts equal to the left row's ts matches
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -86,9 +87,15 @@ def asof_join(
         and 0 < l_size <= thresh
         and l_size * 16 <= r_size
     ):
+        # null-safe keys: the window below groups NULL keys together, so a
+        # NULL-key right row can match a NULL-key left row and must survive
+        keys = left.select(*[F.col(c).alias(f"__asof_k{i}") for i, c in enumerate(on)])
         right = right.join(
-            F.broadcast(left.select(*[F.col(c) for c in on]).distinct()),
-            on=on,
+            F.broadcast(keys.distinct()),
+            on=reduce(
+                lambda a, b: a & b,
+                [F.col(c).eqNullSafe(F.col(f"__asof_k{i}")) for i, c in enumerate(on)],
+            ),
             how="left_semi",
         )
 

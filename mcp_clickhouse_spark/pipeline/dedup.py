@@ -17,6 +17,8 @@ Scale design:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -153,7 +155,7 @@ def _shingle_zip_expr(text_col: str) -> str:
 def _band_hash_expr(rows_per_band: int, sig_col: str, band_var: str = "b") -> str:
     """The per-band bucket hash over ``sig_col`` for lambda variable
     ``band_var`` — the ONE definition of the LSH bucket function, embedded
-    by both banding generators below and (via band_bucket_posexplode) the
+    by minhash_lsh_candidates and (via band_bucket_posexplode) the
     streaming near-dup detector."""
     rpb = int(rows_per_band)
     return (
@@ -165,8 +167,8 @@ def _band_hash_expr(rows_per_band: int, sig_col: str, band_var: str = "b") -> st
 
 def band_bucket_posexplode(bands: int, rows_per_band: int, sig_col: str = "signature") -> str:
     """selectExpr string exploding a signature into (band, bucket) rows —
-    the flat banding form shared by the batch collapse_identical=False
-    path and the streaming near-dup detector."""
+    the flat all-members banding of the streaming near-dup detector (and
+    of the batch reference its replay pins against)."""
     return (
         f"posexplode(transform(sequence(0, {int(bands) - 1}),"
         f" b -> {_band_hash_expr(rows_per_band, sig_col)})) AS (band, bucket)"
@@ -408,7 +410,6 @@ def minhash_lsh_candidates(
     bands: int = 8,
     rows_per_band: int = 4,
     max_bucket_size: int = 500,
-    collapse_identical: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) via LSH banding, at
     SIGNATURE-CLUSTER granularity.
@@ -424,14 +425,13 @@ def minhash_lsh_candidates(
     sharing a full signature form an exact-dup cluster; its min-id member
     becomes the representative and the others attach as ``(rep, member)``
     star pairs — O(m) rows per m-member cluster — and banding runs over
-    REPRESENTATIVES only, exactly the r10 simhash shape (simhash_near_dups
-    below).  Downstream jaccard_verify still true-Jaccard-checks every star
-    pair, and connected-components reconstructs the full clusters, so
-    nothing is lost.  ``collapse_identical=False`` restores the flat
-    all-members banding — the streaming twin
-    (streaming/ops.streaming_minhash_neardup) pins its replay against that
-    shape, since an incremental stream cannot know the global min-id
-    representative.
+    REPRESENTATIVES only (``_collapsed_band_pairs``, shared with
+    simhash_near_dups and similarity.embedding_neardup_pairs).  Downstream
+    jaccard_verify still true-Jaccard-checks every star pair, and
+    connected-components reconstructs the full clusters, so nothing is
+    lost.  The streaming twin (streaming/ops.streaming_minhash_neardup)
+    cannot know the global min-id representative; its replay pins against
+    a flat all-members banding kept in tests/neardup_reference.py.
 
     Banding is ONE shuffle end-to-end: the banded rows exchange once on
     (band, bucket); a row_number window (reusing that exchange's
@@ -444,103 +444,142 @@ def minhash_lsh_candidates(
     round-3 item 7).  The collapse adds one exchange over |docs|
     signature keys — linear, and it removes the quadratic pair volume.
 
-    ``max_bucket_size`` caps the per-(band, bucket) population BEFORE pair
-    generation: a degenerate corpus (boilerplate/empty documents that all
-    collide into one bucket) would otherwise generate O(b²) pairs from a
-    single mega-bucket — the classic LSH scale failure.  Overflowing buckets
-    are deterministically truncated to the ``max_bucket_size`` lowest ids
-    (their members are near-identical by construction, and exact-hash dedup
-    upstream catches the fully identical ones).  Because the cap filter runs
-    BEFORE collect_list, no bucket array ever exceeds max_bucket_size
-    elements — per-task memory is bounded even on a 100 TB degenerate
-    corpus, unlike a collect-then-slice formulation.
+    ``max_bucket_size`` (>= 2) caps the per-(band, bucket) population BEFORE
+    pair generation: a degenerate corpus (boilerplate/empty documents that
+    all collide into one bucket) would otherwise generate O(b²) pairs from
+    a single mega-bucket — the classic LSH scale failure.  Overflowing
+    buckets are deterministically truncated to the ``max_bucket_size``
+    lowest ids (their members are near-identical by construction, and
+    exact-hash dedup upstream catches the fully identical ones).  Because
+    the cap filter runs BEFORE collect_list, no bucket array ever exceeds
+    max_bucket_size elements — per-task memory is bounded even on a 100 TB
+    degenerate corpus, unlike a collect-then-slice formulation.
     """
-    if collapse_identical:
-        from pyspark.sql import Window
-
-        # window min DIRECTLY on the signature array (the r10 simhash
-        # convention): no per-group array buffer — a collect_list
-        # formulation measured ~0.3 s faster at sparse sf0.1 but holds
-        # every cluster member in one task buffer, which a 10⁸-member
-        # boilerplate cluster would OOM at 100 TB; WindowExec streams and
-        # spills.
-        rep_w = Window.partitionBy("signature")
-        with_rep = sigs.withColumn("_rep", F.min(id_col).over(rep_w))
-        # r18 (guide §2.4 — one pass instead of two): the former shape split
-        # with_rep into a star branch (member pairs) and a banding branch
-        # (reps only) and unioned them — the union's star side re-read the
-        # signature exchange and re-ran the whole Window a second time (an
-        # extra 8-task pass per execution; the exchange itself was shared by
-        # ReuseExchange, the window sort was not).  ONE generator now emits
-        # both kinds of bucket rows in the window's own stage:
-        #   - reps explode to their `bands` (band, bucket) rows as before;
-        #   - each non-rep member explodes to a synthetic 2-row bucket
-        #     (band = -1, bucket = the member's own id) holding exactly
-        #     {rep, member}, so bucket_pairs emits precisely the former
-        #     (rep, member) star pair.  band -1 can never collide with a
-        #     real band, and the member id is unique per member, so no
-        #     synthetic bucket ever merges with another.
-        # Equivalence is pinned two-sided in tests/test_r18_opt.py.  NULL
-        # ids are filtered explicitly — the old branch predicates (id =/!=
-        # rep) silently dropped them, the CASE below would not.
-        # The synthetic bucket reuses the member id as the bucket value,
-        # which needs a bigint id; any other id type falls back to the
-        # two-branch union shape (never hit by the inventory — doc ids are
-        # bigint everywhere).
-        if dict(sigs.dtypes).get(id_col) == "bigint":
-            bh = _band_hash_expr(rows_per_band, "signature")
-            gen = (
-                f"CASE WHEN {id_col} = _rep THEN"
-                f" transform(sequence(0, {int(bands) - 1}),"
-                f" b -> struct(b AS band, {bh} AS bucket, {id_col} AS _bid))"
-                f" ELSE array("
-                f" struct(-1 AS band, {id_col} AS bucket, _rep AS _bid),"
-                f" struct(-1 AS band, {id_col} AS bucket, {id_col} AS _bid))"
-                f" END"
-            )
-            banded = (
-                with_rep.where(F.col(id_col).isNotNull())
-                .select(F.explode(F.expr(gen)).alias("e"))
-                .select("e.band", "e.bucket", F.col("e._bid").alias(id_col))
-            )
-            return _persist(
-                bucket_pairs(banded, id_col, max_bucket_size).distinct()
-            )
-        with_rep = _persist(with_rep)
-        star = with_rep.where(F.col(id_col) != F.col("_rep")).select(
-            F.col("_rep").alias("id_a"), F.col(id_col).alias("id_b")
-        )
-        banded = with_rep.where(F.col(id_col) == F.col("_rep")).selectExpr(
+    bh = _band_hash_expr(rows_per_band, "signature")
+    return _persist(
+        _collapsed_band_pairs(
+            sigs,
             id_col,
-            band_bucket_posexplode(bands, rows_per_band),
+            "signature",
+            lambda fields: f"transform(sequence(0, {int(bands) - 1}),"
+            f" b -> struct(b AS band, {bh} AS bucket, {fields}))",
+            max_bucket_size,
         )
-        pairs = bucket_pairs(banded, id_col, max_bucket_size).unionByName(star)
-        return _persist(pairs.distinct())
-    banded = sigs.selectExpr(
-        id_col,
-        # one parsed expression: per band, hash the comma-joined band rows
-        band_bucket_posexplode(bands, rows_per_band),
     )
-    return _persist(bucket_pairs(banded, id_col, max_bucket_size).distinct())
 
 
-def bucket_pairs(banded: DataFrame, id_col: str, max_bucket_size: int) -> DataFrame:
+def _collapsed_band_pairs(
+    df: DataFrame,
+    id_col: str,
+    key_col: str,
+    rep_bands: Callable[[str], str],
+    max_bucket_size: int,
+    project: list | None = None,
+    carry: str | None = None,
+) -> DataFrame:
+    """Distinct (id_a, id_b) candidate pairs from collapsed banding — the
+    one core of the three near-dup operators (MinHash-LSH, SimHash,
+    embedding near-dup).
+
+    Rows sharing ``key_col`` (the signature, the fingerprint, the exact
+    vector) form an exact-dup cluster whose min-id member is the
+    representative.  The representative is a window min directly on the
+    key — no per-group array buffer: a collect_list formulation measured
+    ~0.3 s faster at sparse sf0.1 but holds every cluster member in one
+    task buffer, which a 10⁸-member boilerplate cluster would OOM at
+    100 TB; WindowExec streams and spills.
+
+    ONE generator in the window's own stage emits both kinds of bucket
+    rows (r18 — one pass instead of two):
+      - a representative emits ``rep_bands(fields)``, the caller's SQL
+        array of ``struct(<band> AS band, <bucket> AS bucket, <fields>)``;
+      - each non-rep member emits a synthetic 2-row bucket (band = -1,
+        bucket = the member's own id) holding exactly {rep, member}, so
+        ``bucket_pairs`` emits precisely the (rep, member) star pair.
+        band -1 never collides with a real band, and the member id is
+        unique per member, so no synthetic bucket merges with another.
+    The former shape unioned a star branch with a reps-only banding
+    branch, re-running the whole Window (and, in SimHash, the fingerprint
+    aggregate) a second time; equivalence with it is pinned two-sided in
+    tests/test_r18_opt.py.  A non-integral id moves every bucket value to
+    its string form (band -1 still keeps the two kinds apart).  NULL ids
+    are filtered explicitly — the old branch predicates (id =/!= rep)
+    dropped them silently; the CASE would not.
+
+    ``project``: columns computed BELOW the generate that the band
+    expressions reference (embedding's plane sums — the janino
+    method-size split, see similarity.band_plane_exprs).  ``carry``: a
+    column that travels with each id into its buckets and comes out as
+    ``<carry>_a`` / ``<carry>_b`` (SimHash's fingerprint; members share
+    their representative's, so the synthetic bucket carries it for both).
+
+    ``max_bucket_size`` must be >= 2: the 2-row star buckets go through the
+    same cap, and a cap of 1 would silently drop every exact-dup pair.  No
+    band -1 exemption: a plain ``row_number <= cap`` filter is what lets
+    Spark infer its WindowGroupLimit.
+    """
+    from pyspark.sql import Window
+
+    if max_bucket_size < 2:
+        raise ValueError(
+            f"max_bucket_size must be >= 2 (got {max_bucket_size}): a bucket "
+            "capped below two members yields no pairs"
+        )
+    carried = [carry] if carry else []
+    with_rep = df.withColumn(
+        "_rep", F.min(id_col).over(Window.partitionBy(key_col))
+    ).where(F.col(id_col).isNotNull())
+    if project:
+        with_rep = with_rep.select(id_col, "_rep", *carried, *project)
+    tail = "".join(f", {c} AS {c}" for c in carried)
+    rep = rep_bands(f"{id_col} AS _bid{tail}")
+    member = id_col
+    if dict(df.dtypes)[id_col] not in ("tinyint", "smallint", "int", "bigint"):
+        # the CASE would coerce a string id to the bigint bucket type (and
+        # fail on a non-numeric one): bucket values go to their string form
+        fields = "".join(f", s.{c} AS {c}" for c in ["_bid", *carried])
+        rep = (
+            f"transform({rep}, s -> struct(s.band AS band,"
+            f" CAST(s.bucket AS STRING) AS bucket{fields}))"
+        )
+        member = f"CAST({id_col} AS STRING)"
+    gen = (
+        f"CASE WHEN {id_col} = _rep THEN {rep}"
+        f" ELSE array("
+        f" struct(-1 AS band, {member} AS bucket, _rep AS _bid{tail}),"
+        f" struct(-1 AS band, {member} AS bucket, {id_col} AS _bid{tail}))"
+        f" END"
+    )
+    banded = with_rep.select(F.explode(F.expr(gen)).alias("e")).select(
+        "e.band",
+        "e.bucket",
+        F.col("e._bid").alias(id_col),
+        *[F.col(f"e.{c}").alias(c) for c in carried],
+    )
+    return bucket_pairs(banded, id_col, max_bucket_size, carry).distinct()
+
+
+def bucket_pairs(
+    banded: DataFrame, id_col: str, max_bucket_size: int, carry: str | None = None
+) -> DataFrame:
     """Distinct-per-bucket (id_a < id_b) pairs from a (band, bucket, id)
-    frame — the shared pair-generation core of MinHash-LSH and
+    frame — the shared pair-generation core of MinHash-LSH, SimHash and
     embedding-LSH near-dup.  One shuffle: window cap + collect_list reuse
     the same (band, bucket) exchange; pairs explode from the bounded
-    arrays.  Callers ``.distinct()`` the result (the same pair can surface
-    from several bands)."""
+    arrays.  ``carry`` names a column collected alongside each id and
+    returned as ``<carry>_a`` / ``<carry>_b``.  Callers ``.distinct()`` the
+    result (the same pair can surface from several bands)."""
     from pyspark.sql import Window
 
     cap_w = Window.partitionBy("band", "bucket").orderBy(id_col)
     capped = banded.withColumn("_rn", F.row_number().over(cap_w)).where(
         F.col("_rn") <= max_bucket_size
     )
+    elem = F.struct(F.col(id_col).alias("id"), carry) if carry else F.col(id_col)
     buckets = capped.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list(id_col)).alias("_ids")
+        F.sort_array(F.collect_list(elem)).alias("_ids")
     )
-    return (
+    pairs = (
         buckets.where(F.size("_ids") >= 2)
         .select(F.col("_ids"), F.posexplode("_ids").alias("_i", "id_a"))
         .select(
@@ -549,6 +588,12 @@ def bucket_pairs(banded: DataFrame, id_col: str, max_bucket_size: int) -> DataFr
                 F.slice(F.col("_ids"), F.col("_i") + 2, F.size("_ids"))
             ).alias("id_b"),
         )
+    )
+    if not carry:
+        return pairs
+    return pairs.select(
+        *[F.col(f"id_{s}.id").alias(f"id_{s}") for s in "ab"],
+        *[F.col(f"id_{s}.{carry}").alias(f"{carry}_{s}") for s in "ab"],
     )
 
 
@@ -715,15 +760,17 @@ def simhash_near_dups(
        all-pairs form emitted O(m²) rows from every such cluster
        (20,395,900 pairs at sf1), which is quadratic on a boilerplate-heavy
        corpus; downstream connected-components reconstructs the identical
-       clusters from the star pairs, so nothing is lost.
+       clusters from the star pairs, so nothing is lost.  The collapse,
+       banding and cap are the shared ``_collapsed_band_pairs`` core; the
+       fingerprints travel with the ids into the buckets.
     2. **Pigeonhole blocking over REPRESENTATIVES only**: split the bits
        into ``blocks`` chunks; any pair within distance
        ``max_hamming (< blocks)`` agrees on ≥1 whole chunk → bucket by
        chunk value, pair INSIDE buckets only, verify exact hamming via
        bit_count(xor).  Chunk values are extracted with getbit + acc*2
        (shift builtins only take literal amounts).
-    3. **Bucket cap** (the MinHash-LSH convention, dedup.py
-       ``bucket_pairs``): each (chunk_idx, chunk_val) bucket is
+    3. **Bucket cap** (the MinHash-LSH convention, ``bucket_pairs``;
+       ``max_bucket_size`` >= 2): each (chunk index, chunk value) bucket is
        deterministically truncated to its ``max_bucket_size`` lowest rep
        ids BEFORE pair generation — a degenerate chunk bucket (near-empty
        docs whose fingerprints agree on one chunk) can no longer go
@@ -733,76 +780,24 @@ def simhash_near_dups(
        shuffle: window cap + collect_list reuse the same exchange — no
        self-join).
     """
-    from pyspark.sql import Window
-
-    rep_w = Window.partitionBy("simhash")
-    with_rep = hashes.withColumn("_rep", F.min(id_col).over(rep_w))
     width = SIMHASH_BITS // blocks
-    # r18 (guide §2.4, same fusion as minhash_lsh_candidates): the former
-    # shape computed the fingerprints TWICE — `reps` was a separate
-    # groupBy(simhash) whose partial aggregation runs before its exchange,
-    # so not even ReuseExchange could share it with the window branch.  ONE
-    # generator now emits both kinds of bucket rows from the window's own
-    # stage: reps explode to their `blocks` pigeonhole chunks; each non-rep
-    # member explodes to a synthetic 2-row bucket (chunk_idx = −1,
-    # chunk_val = the member's own id — collision-free vs real chunks and
-    # other members) holding {rep, member}, whose fingerprints are
-    # IDENTICAL by construction, so the shared hamming verify emits exactly
-    # the former (rep, member, 0) star pair.  NULL ids are filtered
-    # explicitly (the old branch predicates dropped them from stars and
-    # star members from banding; non-null ids are the operating contract).
-    # Requires a bigint id for the synthetic bucket — true of every caller
-    # (doc_id / vec_id).  Equivalence pinned in tests/test_r18_opt.py.
     chunk_val = (
         f"aggregate(sequence({width - 1}, 0, -1), CAST(0 AS BIGINT),"
         f" (acc, i) -> acc * 2 + getbit(simhash, b * {width} + i))"
     )
-    gen = (
-        f"CASE WHEN {id_col} = _rep THEN"
-        f" transform(sequence(0, {int(blocks) - 1}),"
-        f" b -> struct(b AS chunk_idx, {chunk_val} AS chunk_val,"
-        f" {id_col} AS _bid, simhash AS _bsh))"
-        f" ELSE array("
-        f" struct(-1 AS chunk_idx, {id_col} AS chunk_val, _rep AS _bid, simhash AS _bsh),"
-        f" struct(-1 AS chunk_idx, {id_col} AS chunk_val, {id_col} AS _bid, simhash AS _bsh))"
-        f" END"
-    )
-    chunked = (
-        with_rep.where(F.col(id_col).isNotNull())
-        .select(F.explode(F.expr(gen)).alias("e"))
-        .select(
-            "e.chunk_idx",
-            "e.chunk_val",
-            F.col("e._bid").alias(id_col),
-            F.col("e._bsh").alias("simhash"),
-        )
-    )
-    cap_w = Window.partitionBy("chunk_idx", "chunk_val").orderBy(id_col)
-    capped = chunked.withColumn("_rn", F.row_number().over(cap_w)).where(
-        F.col("_rn") <= max_bucket_size
-    )
-    buckets = capped.groupBy("chunk_idx", "chunk_val").agg(
-        F.sort_array(F.collect_list(F.struct(F.col(id_col).alias("id"), "simhash"))).alias(
-            "_e"
-        )
-    )
-    cand = (
-        buckets.where(F.size("_e") >= 2)
-        .select(F.col("_e"), F.posexplode("_e").alias("_i", "a"))
-        .select(
-            F.col("a"),
-            F.explode(F.slice(F.col("_e"), F.col("_i") + 2, F.size("_e"))).alias("b"),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
+    cand = _collapsed_band_pairs(
+        hashes,
+        id_col,
+        "simhash",
+        lambda fields: f"transform(sequence(0, {int(blocks) - 1}),"
+        f" b -> struct(b AS band, {chunk_val} AS bucket, {fields}))",
+        max_bucket_size,
+        carry="simhash",
     )
     return (
-        cand.withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+        cand.withColumn(
+            "hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+        )
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )

@@ -280,7 +280,6 @@ def embedding_neardup_pairs(
     planes_per_band: int = 6,
     dim: int = 64,
     max_bucket_size: int = 1000,
-    collapse_identical: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a, id_b, cosine) with
     cosine >= threshold — the vector-space sibling of MinHash near-dup.
@@ -298,13 +297,15 @@ def embedding_neardup_pairs(
     round and simhash last round: m exact-duplicate embeddings — e.g.
     re-embedded duplicate documents — share every band bucket and emitted
     C(m, 2) pairs up to the cap, TRUNCATING members past it).  Vectors
-    sharing the exact array collapse to a min-id representative via a
-    window min (no per-group buffer); members attach as O(m) star pairs
-    that flow through the SAME cosine verify (identical vectors ⇒
-    cosine 1.0 ≥ any threshold), and banding runs over representatives.
-    ``collapse_identical=False`` restores the flat shape.
+    sharing the exact array collapse to a min-id representative
+    (dedup._collapsed_band_pairs, the core shared with MinHash and
+    SimHash); members attach as O(m) star pairs that flow through the
+    SAME cosine verify (identical vectors ⇒ cosine 1.0 ≥ any threshold),
+    and banding runs over representatives.  ``max_bucket_size`` must be
+    >= 2.  The plane sums stay their own projected columns BELOW the
+    generate (janino method-size split, see band_plane_exprs).
     """
-    from mcp_clickhouse_spark.pipeline.dedup import bucket_pairs
+    from mcp_clickhouse_spark.pipeline.dedup import _collapsed_band_pairs
 
     # meta is the cosine lookup for BOTH pair sides — built over the FULL
     # corpus before any collapse, so star members resolve their vectors
@@ -316,48 +317,19 @@ def embedding_neardup_pairs(
     plane_cols, bucket_exprs = band_plane_exprs(
         vec_col, bands, planes_per_band, dim
     )
-    if collapse_identical:
-        # r18 (guide §2.4, the minhash_lsh_candidates fusion): ONE generator
-        # over the collapse window emits reps' band rows AND each member's
-        # synthetic 2-row bucket (band = −1, bucket = member id) holding
-        # {rep, member} — identical vectors ⇒ the shared cosine verify
-        # scores the former star pair at 1.0 ≥ any threshold.  Removes the
-        # union's second window pass and the with_rep persist.  The plane
-        # sums stay their own projected columns BELOW the generate (janino
-        # method-size split, see band_plane_exprs); the generate's CASE
-        # only references them.  NULL ids filtered explicitly (the old
-        # branch predicates dropped them silently).
-        rep_w = Window.partitionBy(vec_col)
-        with_rep = corpus.select(id_col, vec_col).withColumn(
-            "_rep", F.min(id_col).over(rep_w)
-        )
-        projected = with_rep.where(F.col(id_col).isNotNull()).select(
-            F.col(id_col), F.col("_rep"), *plane_cols
-        )
-        band_structs = ", ".join(
-            f"struct({b} AS band, CAST({e} AS BIGINT) AS bucket, {id_col} AS _bid)"
+    pairs = _collapsed_band_pairs(
+        corpus.select(id_col, vec_col),
+        id_col,
+        vec_col,
+        lambda fields: "array("
+        + ", ".join(
+            f"struct({b} AS band, CAST({e} AS BIGINT) AS bucket, {fields})"
             for b, e in enumerate(bucket_exprs)
         )
-        gen = (
-            f"CASE WHEN {id_col} = _rep THEN array({band_structs})"
-            f" ELSE array("
-            f" struct(-1 AS band, {id_col} AS bucket, _rep AS _bid),"
-            f" struct(-1 AS band, {id_col} AS bucket, {id_col} AS _bid))"
-            f" END"
-        )
-        banded = (
-            projected.select(F.explode(F.expr(gen)).alias("e"))
-            .select("e.band", "e.bucket", F.col("e._bid").alias(id_col))
-        )
-    else:
-        projected = corpus.select(F.col(id_col), *plane_cols)
-        banded = projected.select(
-            F.col(id_col),
-            F.posexplode(
-                F.array(*[F.expr(e) for e in bucket_exprs])
-            ).alias("band", "bucket"),
-        )
-    pairs = bucket_pairs(banded, id_col, max_bucket_size).distinct()
+        + ")",
+        max_bucket_size,
+        project=plane_cols,
+    )
     return (
         pairs.join(
             meta.select(

@@ -146,7 +146,10 @@ _WAREHOUSE_ROOT = os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_ware
 # and cost ~+0.01 s each on q1/join_star; a flat 16 cap also cost +0.013 s
 # on join_asof) — sf0.1 stays parallelism-capped by design, which bench.py
 # now documents in its output; the scaling signal lives at sf1 and above.
-# SPARK_GRAFT_SPLIT_MAX_FILES remains the hard ceiling.
+# SPARK_GRAFT_SPLIT_MAX_FILES is now ONLY a ceiling above that per-table cap
+# (before r18 it was the cap itself, default 8): raising it cannot lift a
+# small table past 8 files, whatever it is set to; lowering it still caps
+# every table.
 _SPLIT_ROWS = int(os.environ.get("SPARK_GRAFT_SPLIT_ROWS", 18_750))
 _SPLIT_MAX_FILES = int(os.environ.get("SPARK_GRAFT_SPLIT_MAX_FILES", 32))
 _SPLIT_BIG_ROWS = int(os.environ.get("SPARK_GRAFT_SPLIT_BIG_ROWS", 1_000_000))

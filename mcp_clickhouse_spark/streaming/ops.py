@@ -442,8 +442,12 @@ def streaming_minhash_neardup(
     """Streaming MinHash-LSH near-dup detection: as documents arrive, emit
     candidate pairs against everything previously seen in the same LSH
     bucket — the continuous twin of the batch
-    ``minhash_signatures → minhash_lsh_candidates`` pipeline, producing the
-    SAME pairs on a bounded replay (pinned by test).
+    ``minhash_signatures → minhash_lsh_candidates`` pipeline.  The stream
+    cannot know the global min-id representative the batch op collapses
+    identical signatures to, so a bounded replay produces the SAME pairs
+    as the flat all-members banding (``band_bucket_posexplode`` +
+    ``bucket_pairs``) kept as the test reference in
+    tests/neardup_reference.py (pinned by test).
 
     Stages:
     1. Per-row OPH signature (``dedup.with_minhash_signature``) — stateless,
@@ -654,9 +658,11 @@ def streaming_embedding_neardup(
 
     Cap/evict policy mirrors the batch ``bucket_pairs`` exactly (retain
     the ``max_bucket_size`` LOWEST ids), so an ID-ORDERED bounded replay
-    yields the same pair set as the batch run with
-    ``collapse_identical=False`` (pinned by test; the stream cannot know
-    the global min-id representative, same caveat as
+    yields the same pair set as the flat all-members banding
+    (``band_plane_exprs`` + ``bucket_pairs`` + exact cosine) kept as the
+    test reference in tests/neardup_reference.py (pinned by test; the
+    stream cannot know the global min-id representative the batch op
+    collapses identical vectors to, same caveat as
     streaming_minhash_neardup).  With OUT-OF-ORDER arrival the stream
     emits a SUPERSET of the batch pairs: a late lower id can evict a
     higher id whose already-emitted pairs cannot be retracted in append

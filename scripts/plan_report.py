@@ -106,9 +106,14 @@ def main() -> None:
         "Notes:",
         "- `join_asof` is the union+window strategy: exactly one exchange for",
         "  arbitrarily large sides (no pairwise blowup).",
-        "- `join_star_revenue` pre-aggregates the fact side, then all FOUR",
-        "  dimension joins broadcast statically (file-level size stats) — its",
-        "  exchanges are the pre-agg and final regroup only.",
+        "- `join_star_revenue` is SIZE-ADAPTIVE (inventory/joins.py): when",
+        "  orders AND customer both estimate under autoBroadcastJoinThreshold,",
+        "  lineitem probes all FOUR dimension broadcasts directly, so its only",
+        "  shuffle is the final regroup (the row above: 4 BroadcastExchange +",
+        "  1 Exchange).  Otherwise it pre-aggregates lineitem to one row per",
+        "  order before the joins, shrinking the shuffled fact side ~4×.  Rows",
+        "  are identical either way; the plan cache freezes the branch chosen",
+        "  at first construction for the session.",
         "- Exchange counts are static plans (AQE can only reduce them).",
         "- `pipe_minhash_lsh`'s count reflects the full multi-stage DAG",
         "  (signatures → single-shuffle banded pair generation → melted",

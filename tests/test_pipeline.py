@@ -224,8 +224,10 @@ def test_lsh_bucket_cap_bounds_degenerate_corpus(spark):
     first, so the whole 40-doc cluster surfaces as exactly 39 star pairs
     (0, i) — LINEAR and complete, where the old capped truncation kept 45
     pairs over the 10 lowest ids and DROPPED docs 10-39 entirely.  The
-    flat path (collapse_identical=False, the streaming twin's shape) still
-    pins the r1/r2 bucket-cap bound."""
+    flat all-members banding (tests/neardup_reference.py, the streaming
+    twin's shape) still pins the r1/r2 bucket-cap bound."""
+    from tests.neardup_reference import flat_minhash_candidates
+
     n = 40
     rows = [(i, BASE) for i in range(n)]
     degenerate = spark.createDataFrame(rows, "doc_id long, text string")
@@ -237,9 +239,8 @@ def test_lsh_bucket_cap_bounds_degenerate_corpus(spark):
     assert got == {(0, i) for i in range(1, n)}
     # flat path: 10 survivors per bucket → at most C(10,2)=45 pairs;
     # uncapped would be C(40,2)=780; the lowest ids survive
-    capped = minhash_lsh_candidates(
-        sigs, bands=8, rows_per_band=4, max_bucket_size=10,
-        collapse_identical=False,
+    capped = flat_minhash_candidates(
+        sigs, bands=8, rows_per_band=4, max_bucket_size=10
     )
     flat = {(r["id_a"], r["id_b"]) for r in capped.collect()}
     assert 0 < len(flat) <= 45

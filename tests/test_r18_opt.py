@@ -71,23 +71,57 @@ CORPUS = [
 
 
 def test_minhash_candidates_unified_generator_matches_legacy(spark):
+    """One generator for every id type: the synthetic star bucket keys on
+    the member id (its string form for a non-integral id), so int and
+    non-numeric string ids need no separate union shape."""
     from mcp_clickhouse_spark.pipeline.dedup import (
         minhash_lsh_candidates,
         minhash_signatures,
         release_persisted,
     )
 
-    df = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
-    sigs = minhash_signatures(df, num_hashes=32)
-    got = _pairs(minhash_lsh_candidates(sigs, bands=8, rows_per_band=4))
-    want = _pairs(_legacy_candidates(sigs))
-    assert got == want and len(got) > 0
-    # structure sanity: doc 60 dups doc 20's text, so (20, 60) is a star
-    # pair; the exact-dup cluster stars on 10
-    assert (10, 11) in got and (10, 12) in got and (10, 13) in got
-    assert (20, 60) in got
-    release_persisted()
-    spark.catalog.clearCache()
+    for id_type in ("bigint", "int", "string"):
+        key = (lambda i: f"doc-{i}") if id_type == "string" else (lambda i: i)
+        df = spark.createDataFrame(
+            [(key(i), t) for i, t in CORPUS], f"doc_id {id_type}, text string"
+        )
+        sigs = minhash_signatures(df, num_hashes=32)
+        cand = minhash_lsh_candidates(sigs, bands=8, rows_per_band=4)
+        assert dict(cand.dtypes) == {"id_a": id_type, "id_b": id_type}
+        got = _pairs(cand)
+        want = _pairs(_legacy_candidates(sigs))
+        assert got == want and len(got) > 0, id_type
+        # structure sanity: doc 60 dups doc 20's text, so (20, 60) is a
+        # star pair; the exact-dup cluster stars on 10
+        for a, b in ((10, 11), (10, 12), (10, 13), (20, 60)):
+            assert (key(a), key(b)) in got, id_type
+        release_persisted()
+        spark.catalog.clearCache()
+
+
+def test_neardup_operators_reject_cap_below_two(spark):
+    """A bucket capped at one member yields no pairs — the synthetic
+    2-row star buckets too — so every exact-dup pair would vanish
+    silently.  All three operators refuse the cap instead."""
+    from mcp_clickhouse_spark.pipeline.dedup import (
+        minhash_lsh_candidates,
+        minhash_signatures,
+        simhash_64,
+        simhash_near_dups,
+    )
+    from mcp_clickhouse_spark.pipeline.similarity import embedding_neardup_pairs
+
+    df = spark.createDataFrame(CORPUS[:3], "doc_id bigint, text string")
+    with pytest.raises(ValueError, match="max_bucket_size"):
+        minhash_lsh_candidates(minhash_signatures(df), max_bucket_size=1)
+    with pytest.raises(ValueError, match="max_bucket_size"):
+        simhash_near_dups(simhash_64(df), max_bucket_size=1)
+    vecs = spark.createDataFrame(
+        [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(3)],
+        "vec_id bigint, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="max_bucket_size"):
+        embedding_neardup_pairs(vecs, dim=4, max_bucket_size=1)
 
 
 def test_minhash_candidates_null_ids_dropped_like_legacy(spark):
@@ -234,24 +268,40 @@ def test_asof_prefilter_gated_on_selectivity(spark):
     right_big = read_table(spark, "/root/testdata/sf0.1", "events").where(
         F.col("event_type") == "signup"
     ).select("user_id", "ts", "value")
-    pruned = asof_join(left_small, right_big, on=["user_id"], left_ts="ts",
-                       right_ts="ts", right_cols=["value"])
-    assert "LeftSemi" in explain_formatted(pruned)
-    # rows identical to the ungated formulation (prune only removes right
-    # rows that join to nothing): rebuild with the estimator disabled
+    # NULL-key vector: the window groups NULL keys together, so NULL-key
+    # left rows match NULL-key right rows and the prune must keep those
+    def null_some(df, m):
+        return df.withColumn(
+            "user_id",
+            F.when(F.col("user_id") % m == 0, None).otherwise(F.col("user_id")),
+        )
+
+    vectors = [
+        (left_small, right_big),
+        (null_some(left_small, 3), null_some(right_big, 3)),
+    ]
     import unittest.mock as mock
 
-    with mock.patch(
-        "mcp_clickhouse_spark.plans.inspect.estimated_size_bytes",
-        return_value=None,
-    ):
-        ref = asof_join(left_small, right_big, on=["user_id"], left_ts="ts",
-                        right_ts="ts", right_cols=["value"])
-        assert "LeftSemi" not in explain_formatted(ref)
-        ref_rows = ref.collect()
-    got = pruned.collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, ref_rows))
-    assert len(got) > 0
+    for lf, rt in vectors:
+        pruned = asof_join(lf, rt, on=["user_id"], left_ts="ts",
+                           right_ts="ts", right_cols=["value"])
+        assert "LeftSemi" in explain_formatted(pruned)
+        # rows identical to the ungated formulation (prune only removes
+        # right rows that join to nothing): rebuild with the estimator
+        # disabled
+        with mock.patch(
+            "mcp_clickhouse_spark.plans.inspect.estimated_size_bytes",
+            return_value=None,
+        ):
+            ref = asof_join(lf, rt, on=["user_id"], left_ts="ts",
+                            right_ts="ts", right_cols=["value"])
+            assert "LeftSemi" not in explain_formatted(ref)
+            ref_rows = ref.collect()
+        got = pruned.collect()
+        assert sorted(map(repr, got)) == sorted(map(repr, ref_rows))
+        assert len(got) > 0
+    # the NULL-key vector really has NULL-key matches to lose
+    assert any(r["user_id"] is None and r["value_r"] is not None for r in ref_rows)
 
 
 def _legacy_simhash_neardups(hashes, id_col="doc_id", max_hamming=3,
@@ -322,16 +372,25 @@ def test_simhash_neardups_unified_generator_matches_legacy(spark):
 
     d = read_table(spark, "/root/testdata/sf0.001", "documents")
     hashes = simhash_64(d)
-    for mh, cap in ((3, 500), (6, 500), (3, 2)):
-        got = sorted(
-            map(tuple, simhash_near_dups(
-                hashes, max_hamming=mh, max_bucket_size=cap).collect())
-        )
-        want = sorted(
-            map(tuple, _legacy_simhash_neardups(
-                hashes, max_hamming=mh, max_bucket_size=cap).collect())
-        )
-        assert got == want and len(got) > 0, (mh, cap)
+    # NULL ids: one joins an existing doc's fingerprint cluster as a
+    # member, two form a NULL-only cluster far (hamming 60) from it
+    sh0 = hashes.orderBy("doc_id").first()["simhash"]
+    nulls = spark.createDataFrame(
+        [(None, sh0), (None, sh0 ^ ((1 << 60) - 1)), (None, sh0 ^ ((1 << 60) - 1))],
+        hashes.schema,
+    )
+    for frame in (hashes, hashes.unionByName(nulls)):
+        for mh, cap in ((3, 500), (6, 500), (3, 2)):
+            got = sorted(
+                map(tuple, simhash_near_dups(
+                    frame, max_hamming=mh, max_bucket_size=cap).collect())
+            )
+            want = sorted(
+                map(tuple, _legacy_simhash_neardups(
+                    frame, max_hamming=mh, max_bucket_size=cap).collect())
+            )
+            assert got == want and len(got) > 0, (mh, cap)
+            assert all(a is not None and b is not None for a, b, _ in got)
     # the one shared plan computes fingerprints once: a single Window, no
     # Union, no second aggregation over the corpus words
     from mcp_clickhouse_spark.plans import count_nodes, explain_formatted
@@ -348,16 +407,9 @@ def _legacy_embedding_neardups(corpus, threshold=0.45, id_col="vec_id",
     from pyspark.sql import Window
 
     from mcp_clickhouse_spark.pipeline.dedup import bucket_pairs
-    from mcp_clickhouse_spark.pipeline.similarity import (
-        _dot_sql,
-        _norm_sql,
-        band_plane_exprs,
-    )
+    from mcp_clickhouse_spark.pipeline.similarity import band_plane_exprs
+    from tests.neardup_reference import cosine_verify
 
-    meta = corpus.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"),
-        F.expr(_norm_sql(vec_col)).alias("_norm"),
-    )
     rep_w = Window.partitionBy(vec_col)
     with_rep = corpus.select(id_col, vec_col).withColumn(
         "_rep", F.min(id_col).over(rep_w)
@@ -377,20 +429,7 @@ def _legacy_embedding_neardups(corpus, threshold=0.45, id_col="vec_id",
     pairs = (
         bucket_pairs(banded, id_col, max_bucket_size).unionByName(star).distinct()
     )
-    return (
-        pairs.join(
-            meta.select(F.col("_id").alias("id_a"), F.col("_vec").alias("vec_a"),
-                        F.col("_norm").alias("norm_a")), on="id_a")
-        .join(
-            meta.select(F.col("_id").alias("id_b"), F.col("_vec").alias("vec_b"),
-                        F.col("_norm").alias("norm_b")), on="id_b")
-        .withColumn(
-            "cosine",
-            F.expr(f"round({_dot_sql('vec_a', 'vec_b')} / (norm_a * norm_b), 6)"),
-        )
-        .where(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
+    return cosine_verify(pairs, corpus, threshold, id_col, vec_col)
 
 
 def test_embedding_neardups_unified_generator_matches_legacy(spark):
@@ -408,9 +447,20 @@ def test_embedding_neardups_unified_generator_matches_legacy(spark):
         e.schema,
     )
     e = e.unionByName(dups)
-    got = sorted(map(tuple, embedding_neardup_pairs(e, threshold=0.2).collect()))
-    want = sorted(map(tuple, _legacy_embedding_neardups(e, threshold=0.2).collect()))
-    assert got == want and len(got) > 0
-    # the injected duplicates surface as (rep, member) pairs at cosine 1.0
-    stars = [(a, b) for a, b, c in got if b >= 900000 and c == 1.0]
-    assert len(stars) == 3
+    # NULL ids: one copies the smallest vec_id's embedding (a member of its
+    # cluster), two share a vector of their own (a NULL-only cluster)
+    nulls = spark.createDataFrame(
+        [(None, dup_src[0]["embedding"])] + [(None, [0.5] * 64)] * 2, e.schema
+    )
+    for frame in (e, e.unionByName(nulls)):
+        got = sorted(
+            map(tuple, embedding_neardup_pairs(frame, threshold=0.2).collect())
+        )
+        want = sorted(
+            map(tuple, _legacy_embedding_neardups(frame, threshold=0.2).collect())
+        )
+        assert got == want and len(got) > 0
+        assert all(a is not None and b is not None for a, b, _ in got)
+        # the injected duplicates surface as (rep, member) pairs at cosine 1.0
+        stars = [(a, b) for a, b, c in got if b >= 900000 and c == 1.0]
+        assert len(stars) == 3

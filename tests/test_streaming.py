@@ -355,26 +355,23 @@ def neardup_corpus(spark, tmp_path_factory):
 
 
 def test_streaming_minhash_matches_batch_candidates(spark, neardup_corpus):
-    from mcp_clickhouse_spark.pipeline.dedup import (
-        minhash_lsh_candidates,
-        minhash_signatures,
-    )
+    from mcp_clickhouse_spark.pipeline.dedup import minhash_signatures
     from mcp_clickhouse_spark.streaming.ops import (
         stream_documents,
         streaming_minhash_neardup,
     )
+    from tests.neardup_reference import flat_minhash_candidates
 
     docs = spark.read.parquet(neardup_corpus)
     batch_pairs = {
         (r.id_a, r.id_b)
-        for r in minhash_lsh_candidates(
+        # the stream cannot know the global min-id representative, so its
+        # replay pins against the flat all-members banding
+        for r in flat_minhash_candidates(
             minhash_signatures(docs, num_hashes=16),
             bands=4,
             rows_per_band=4,
             max_bucket_size=16,
-            # the stream cannot know the global min-id representative, so
-            # its replay pins against the flat all-members banding
-            collapse_identical=False,
         ).collect()
     }
     assert batch_pairs, "corpus must yield at least one candidate pair"
@@ -725,19 +722,19 @@ def test_streaming_embedding_neardup_matches_batch(spark, tmp_path):
     """Round 13 (r11 #8): the embedding near-dup streaming twin, pinned
     batch-vs-replay.  8 orthogonal base vectors each with a planted
     near-copy (cosine ≈ 0.999; cross-family cosine ≈ 0) — the bounded
-    multi-file replay must emit exactly the batch pair set (batch with
-    collapse_identical=False: the stream cannot know the global min-id
+    multi-file replay must emit exactly the flat all-members batch pair set
+    (tests/neardup_reference.py: the stream cannot know the global min-id
     representative, same caveat as the MinHash twin).
 
     Equality holds for this ID-ORDERED replay; with OUT-OF-ORDER
     arrival the stream can emit a SUPERSET — a late lower id evicts a
     higher id whose already-emitted pairs cannot be retracted in append
     mode (round-14 advice; the op docstring states the same bound)."""
-    from mcp_clickhouse_spark.pipeline.similarity import embedding_neardup_pairs
     from mcp_clickhouse_spark.streaming.ops import (
         stream_embeddings,
         streaming_embedding_neardup,
     )
+    from tests.neardup_reference import flat_embedding_neardup_pairs
 
     dim = 8
     rows = []
@@ -754,9 +751,7 @@ def test_streaming_embedding_neardup_matches_batch(spark, tmp_path):
 
     kw = dict(threshold=0.45, bands=2, planes_per_band=6, dim=dim,
               max_bucket_size=16)
-    batch = embedding_neardup_pairs(
-        spark.read.parquet(p), collapse_identical=False, **kw
-    ).collect()
+    batch = flat_embedding_neardup_pairs(spark.read.parquet(p), **kw).collect()
     batch_pairs = {(r.id_a, r.id_b) for r in batch}
     assert batch_pairs, "corpus must yield at least one near-dup pair"
 
