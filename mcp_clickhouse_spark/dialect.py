@@ -65,6 +65,21 @@ import re
 import warnings
 from typing import Callable
 
+from mcp_clickhouse_spark.sqltext import (
+    QUOTE_CHARS as _QUOTE_CHARS,
+    depth0_spans as _depth0_spans,
+    find_balanced as _find_balanced,
+    mask_strings,
+    outside_strings as _outside_strings,
+    paren_depth,
+    paren_partners as _paren_partners,
+    quoted_spans,
+    skip_quoted as _skip_quoted,
+    split_args as _split_args,
+    strip_comments as _strip_comments,
+    sub_code,
+)
+
 
 class DialectError(ValueError):
     """A ClickHouse construct that cannot be translated faithfully."""
@@ -486,13 +501,9 @@ def _key_lambda_comparator(lam: str, arr: str) -> str:
     var, body = mm.group(1), mm.group(2).strip()
 
     def subst(target: str) -> str:
-        parts = re.split(r"('(?:[^']|'')*')", body)
-        for j in range(0, len(parts), 2):
-            parts[j] = re.sub(
-                rf"(?<![A-Za-z0-9_]){re.escape(var)}(?![A-Za-z0-9_])",
-                target, parts[j],
-            )
-        return "".join(parts)
+        return sub_code(
+            rf"(?<![A-Za-z0-9_]){re.escape(var)}(?![A-Za-z0-9_])", target, body
+        )
 
     # slot names no user column will shadow: plain l/r would capture an
     # outer column named l or r referenced in the key body
@@ -2479,28 +2490,9 @@ def _split_lambda(lam: str) -> tuple[str, str] | None:
     """Split ``params -> body`` at the FIRST top-level ``->`` (outside
     quotes and brackets).  Returns (params, body) or None when the text
     is not a lambda — the detector for CH's lambda-first array forms."""
-    depth = 0
-    i = 0
-    while i < len(lam) - 1:
-        ch = lam[i]
-        if ch == "'":
-            j = i + 1
-            while j < len(lam):
-                if lam[j] == "'":
-                    if j + 1 < len(lam) and lam[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "-" and lam[i + 1] == ">" and depth <= 0:
+    for i, ch in _depth0_spans(lam):
+        if ch == "-" and lam[i + 1 : i + 2] == ">":
             return lam[:i].strip(), lam[i + 2 :].strip()
-        i += 1
     return None
 
 
@@ -2627,14 +2619,11 @@ def _apply_lambda(lam: str, targets: list[str]) -> str:
             "the lambda must name exactly one parameter per array argument"
         )
     for k2, nm in enumerate(names):
-        parts = re.split(r"('(?:[^']|'')*')", body)
-        for j in range(0, len(parts), 2):
-            parts[j] = re.sub(
-                rf"(?<![A-Za-z0-9_]){re.escape(nm)}(?![A-Za-z0-9_])",
-                f"\x00{k2}\x00",
-                parts[j],
-            )
-        body = "".join(parts)
+        body = sub_code(
+            rf"(?<![A-Za-z0-9_]){re.escape(nm)}(?![A-Za-z0-9_])",
+            f"\x00{k2}\x00",
+            body,
+        )
     for k2, tgt in enumerate(targets):
         body = body.replace(f"\x00{k2}\x00", tgt)
     return body
@@ -9622,23 +9611,17 @@ def _rewrite_brackets(sql: str) -> str:
     ANSI-THREW out-of-range and corrupted integer map keys, and left
     expression subscripts 0-based).  Delta: index 0 on an ARRAY throws
     (CH returns the type default); on maps 0 is a valid key."""
+    if "[" not in sql:
+        return sql
+    masked = mask_strings(sql)
     out: list[str] = []
     i, n = 0, len(sql)
     while i < n:
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            j = _skip_quoted(sql, i)
-            out.append(sql[i:j])
-            i = j
-            continue
-        if ch == "[":
+        if masked[i] == "[":
             # find matching ]
             depth, j = 0, i
             while j < n:
-                c2 = sql[j]
-                if c2 in _QUOTE_CHARS:
-                    j = _skip_quoted(sql, j)
-                    continue
+                c2 = masked[j]
                 if c2 == "[":
                     depth += 1
                 elif c2 == "]":
@@ -9674,175 +9657,44 @@ def _rewrite_brackets(sql: str) -> str:
                 out.append(f"array({inner})")
             i = j + 1
             continue
-        out.append(ch)
+        out.append(sql[i])
         i += 1
     return "".join(out)
 
 
-_QUOTE_CHARS = ("'", '"', "`")
-
-
-def _skip_quoted(s: str, i: int) -> int:
-    """``s[i]`` is a quote char (``'``, ``"``, or a backtick) — return the
-    index just past the span's closing quote.
-
-    The scanners below must treat quoted spans as opaque; this helper owns
-    the escape rules they all share (round-6 verdict #3 + advisor #5):
-    backslash escapes (``\\'``, ``\\\\``) inside single/double quotes
-    (ClickHouse allows both), and doubled-quote escapes (``''``, ``""``,
-    doubled backticks — the Spark-side identifier escape) in all three.
-    An unterminated span runs to end-of-string, so the callers' balance
-    checks still fail loudly instead of mis-pairing.
-    """
-    q = s[i]
-    n = len(s)
-    j = i + 1
-    while j < n:
-        ch = s[j]
-        if ch == "\\" and q != "`":
-            j += 2
-            continue
-        if ch == q:
-            if j + 1 < n and s[j + 1] == q:
-                j += 2
-                continue
-            return j + 1
-        j += 1
-    return n
-
-
-def _strip_comments(sql: str) -> str:
-    """Strip SQL comments before any text rewriting (round 16, advisor
-    #1: ``_rewrite_division`` treated the ``/`` of a closing ``*/`` as a
-    division operator, corrupting any query with a block comment, and
-    ``_rewrite_in_operator`` could fire on ``IN (`` inside a comment).
-    Stripping once here makes every downstream scanner comment-safe.
-
-    ClickHouse comment forms (docs §syntax#comments): C-style
-    ``/* … */`` and line comments ``--``, ``#!``, ``#␣`` (hash must be
-    followed by ``!`` or whitespace — a bare ``#token`` is left alone).
-    Quoted spans are opaque; each comment is replaced by one space so
-    token boundaries survive (``a/*c*/b`` → ``a b``).  An unterminated
-    ``/*`` runs to end-of-string, matching the lexer contract."""
-    out: list[str] = []
-    i = 0
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            j = _skip_quoted(sql, i)
-            out.append(sql[i:j])
-            i = j
-            continue
-        if ch == "/" and sql[i + 1 : i + 2] == "*":
-            j = sql.find("*/", i + 2)
-            out.append(" ")
-            i = n if j == -1 else j + 2
-            continue
-        if (ch == "-" and sql[i + 1 : i + 2] == "-") or (
-            ch == "#"
-            and i + 1 < n
-            and (sql[i + 1] == "!" or sql[i + 1].isspace())
-        ):
-            j = sql.find("\n", i)
-            out.append(" ")
-            i = n if j == -1 else j  # keep the newline itself
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def _find_balanced(sql: str, start: int) -> int:
-    """sql[start] == '(' → index just past its matching ')'. String-aware."""
-    depth = 0
-    i = start
-    while i < len(sql):
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses in SQL")
-
-
-def _split_args(argstr: str) -> list[str]:
-    """Split a top-level argument list on commas (string/paren aware)."""
-    args: list[str] = []
-    depth = 0
-    cur: list[str] = []
-    i, n = 0, len(argstr)
-    while i < n:
-        ch = argstr[i]
-        if ch in _QUOTE_CHARS:
-            j = _skip_quoted(argstr, i)
-            cur.append(argstr[i:j])
-            i = j
-            continue
-        if ch in "([":
-            depth += 1
-            cur.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            args.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    tail = "".join(cur).strip()
-    if tail:
-        args.append(tail)
-    return args
+_FORMAT_TAIL = re.compile(r"(?is)\bFORMAT\s+[A-Za-z0-9_]+\s*;?\s*$")
+# matched against the string-masked text, where a quoted value is a
+# quote pair around blanks
+_SETTING_VALUE = r"(?:'[^']*'|[^,;']+)"
+_SETTINGS_WORD = re.compile(r"(?i)\bSETTINGS\b")
+_SETTINGS_TAIL = re.compile(
+    rf"(?is)\bSETTINGS\s+([A-Za-z0-9_]+\s*=\s*{_SETTING_VALUE}"
+    rf"(?:\s*,\s*[A-Za-z0-9_]+\s*=\s*{_SETTING_VALUE})*)\s*;?\s*$"
+)
 
 
 def extract_settings(sql: str) -> tuple[str, dict[str, str]]:
     """Detach a trailing ClickHouse ``SETTINGS k=v, …`` clause and return
     ``(sql_without_settings, {key: value})`` — the tool layer translates the
     safe subset (``max_execution_time`` → job-group timeout, ``readonly`` →
-    the always-on read-only contract) and warns on the rest, instead of the
-    silent strip that :func:`_strip_suffix_clauses` keeps as a backstop.
+    the always-on read-only contract) and warns on the rest;
+    :func:`_strip_suffix_clauses` drops the same clause on the translator
+    path.
 
     Keys are lowercased; quoted values are unquoted.  A trailing ``FORMAT X``
     (which follows SETTINGS in ClickHouse grammar) is preserved on the
-    returned SQL for the translator's own handling.  Matches inside string
-    literals are ignored (SQL quotes escape by doubling)."""
-
-    def in_literal(pos: int) -> bool:
-        in_q = False
-        i = 0
-        while i < pos:
-            if sql[i] == "'":
-                if in_q and i + 1 < len(sql) and sql[i + 1] == "'":
-                    i += 2  # doubled quote inside a literal
-                    continue
-                in_q = not in_q
-            i += 1
-        return in_q
-
+    returned SQL for the translator's own handling.  Matches inside quoted
+    spans are ignored (:mod:`~mcp_clickhouse_spark.sqltext` rules)."""
     fmt = ""
-    m_fmt = re.search(r"(?is)\bFORMAT\s+[A-Za-z0-9_]+\s*;?\s*$", sql)
-    if m_fmt and not in_literal(m_fmt.start()):
+    m_fmt = _FORMAT_TAIL.search(sql)
+    if m_fmt and _outside_strings(sql, m_fmt.start()):
         fmt = sql[m_fmt.start() :]
         sql = sql[: m_fmt.start()]
-    # value atom: quoted string (with '' doubling) or an unquoted run
-    _val = r"(?:'(?:[^']|'')*'|[^,;']+)"
-    m = re.search(
-        rf"(?is)\bSETTINGS\s+([A-Za-z0-9_]+\s*=\s*{_val}"
-        rf"(?:\s*,\s*[A-Za-z0-9_]+\s*=\s*{_val})*)\s*;?\s*$",
-        sql,
-    )
-    if not m or in_literal(m.start()):
+    m = _SETTINGS_WORD.search(sql) and _SETTINGS_TAIL.search(mask_strings(sql))
+    if not m:
         return sql + fmt, {}
     settings: dict[str, str] = {}
-    for part in _split_args(m.group(1)):  # string-aware comma split
+    for part in _split_args(sql[m.start(1) : m.end(1)]):
         k, _, v = part.partition("=")
         v = v.strip().rstrip(";").strip()
         if len(v) >= 2 and v[0] == v[-1] and v[0] in "'\"":
@@ -9857,7 +9709,9 @@ def _strip_suffix_clauses(sql: str) -> str:
     knobs — Spark equivalents are session confs, not per-query) and
     `FORMAT X` (result marshaling is the tool layer's job)."""
     # FORMAT comes after SETTINGS in ClickHouse grammar — strip outside-in.
-    sql = re.sub(r"(?is)\bFORMAT\s+[A-Za-z0-9_]+\s*;?\s*$", "", sql)
+    m_fmt = _FORMAT_TAIL.search(sql)
+    if m_fmt and _outside_strings(sql, m_fmt.start()):
+        sql = sql[: m_fmt.start()]
     # INTO OUTFILE is a CLIENT-side file write — a read-only query tool
     # has nowhere to put it (round 8: previously a raw Spark parse error)
     m_of = re.search(r"(?is)\bINTO\s+OUTFILE\b", sql)
@@ -9866,30 +9720,11 @@ def _strip_suffix_clauses(sql: str) -> str:
             "INTO OUTFILE is a client-side export — drop it; the tool "
             "returns rows (write with DataFrame.write on the Spark side)"
         )
-    sql = re.sub(
-        r"(?is)\bSETTINGS\s+[A-Za-z0-9_]+\s*=\s*[^,;]+(\s*,\s*[A-Za-z0-9_]+\s*=\s*[^,;]+)*\s*;?\s*$",
-        "",
-        sql,
-    )
+    kept, settings = extract_settings(sql)
+    if settings:
+        # cut at the SETTINGS keyword; the whitespace before it stays
+        sql = sql[: len(sql) - len(sql[len(kept) :].lstrip())]
     return sql
-
-
-def _depth0_spans(sql: str):
-    """Yield (index, char) for characters at paren-depth 0 outside strings."""
-    depth = 0
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0:
-            yield i, ch
-        i += 1
 
 
 def _is_select_star(sql: str, star_idx: int) -> bool:
@@ -9969,14 +9804,12 @@ def _resolve_star_schema(sql: str, star_idx: int) -> list[str]:
         if qm:
             qual = qm.group(1).lower()
     # find FROM at the star's own paren depth, scanning forward
+    masked = mask_strings(sql)
     depth = 0
-    i, n = star_idx, len(sql)
+    n = len(sql)
     from_at = None
-    while i < n:
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
-            continue
+    for i in range(star_idx, n):
+        ch = masked[i]
         if ch in "([":
             depth += 1
         elif ch in ")]":
@@ -9984,11 +9817,10 @@ def _resolve_star_schema(sql: str, star_idx: int) -> list[str]:
                 break
             depth -= 1
         elif depth == 0 and ch in "Ff":
-            m = re.compile(r"(?i)\bFROM\b").match(sql, i)
-            if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
+            m = re.compile(r"(?i)\bFROM\b").match(masked, i)
+            if m and (i == 0 or not (masked[i - 1].isalnum() or masked[i - 1] == "_")):
                 from_at = m.end()
                 break
-        i += 1
     if from_at is None:
         raise guided
     # collect the FROM segment (same depth, up to the next clause keyword)
@@ -10648,24 +10480,6 @@ def _rewrite_with_fill_impl(sql: str) -> str:
     return out
 
 
-def _paren_partners(sql: str) -> dict[int, int]:
-    """Map each ')' index to its matching '(' index (string-literal aware)."""
-    stack: list[int] = []
-    partner: dict[int, int] = {}
-    idx, n = 0, len(sql)
-    while idx < n:
-        ch = sql[idx]
-        if ch in _QUOTE_CHARS:
-            idx = _skip_quoted(sql, idx)
-            continue
-        if ch == "(":
-            stack.append(idx)
-        elif ch == ")" and stack:
-            partner[idx] = stack.pop()
-        idx += 1
-    return partner
-
-
 _DOTTED_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_.]*")
 _JOIN_STOP_WORDS = {
     "on", "using", "where", "group", "having", "order", "limit", "window",
@@ -10736,14 +10550,12 @@ def _parse_table_unit(sql: str, i: int) -> tuple[str, str | None, int] | None:
 def _read_on_condition(sql: str, i: int) -> tuple[str, int]:
     """Capture the ON condition text starting at ``i`` up to the next
     clause/join boundary at the same nesting depth (or a closing paren)."""
+    masked = mask_strings(sql)
     n = len(sql)
     depth = 0
     j = i
     while j < n:
-        ch = sql[j]
-        if ch in _QUOTE_CHARS:
-            j = _skip_quoted(sql, j)
-            continue
+        ch = masked[j]
         if ch == "(":
             depth += 1
         elif ch == ")":
@@ -10753,8 +10565,8 @@ def _read_on_condition(sql: str, i: int) -> tuple[str, int]:
         elif ch == "," and depth == 0:
             break
         elif depth == 0:
-            m = _COND_BOUNDARY.match(sql, j)
-            if m and (j == 0 or not (sql[j - 1].isalnum() or sql[j - 1] == "_")):
+            m = _COND_BOUNDARY.match(masked, j)
+            if m and (j == 0 or not (masked[j - 1].isalnum() or masked[j - 1] == "_")):
                 break
         j += 1
     return sql[i:j], j
@@ -10765,24 +10577,22 @@ _EQUALITY_OP = re.compile(r"(>=|<=|<>|!=|=|>|<)")
 
 def _split_conjuncts(cond: str) -> list[str]:
     """Split a condition on top-level ANDs (paren/string aware)."""
+    masked = mask_strings(cond)
     parts: list[str] = []
     depth = 0
     start = 0
     i = 0
     n = len(cond)
     while i < n:
-        ch = cond[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(cond, i)
-            continue
+        ch = masked[i]
         if ch == "(":
             depth += 1
         elif ch == ")":
             depth -= 1
-        elif depth == 0 and cond[i : i + 3].upper() == "AND" and (
-            i == 0 or not (cond[i - 1].isalnum() or cond[i - 1] == "_")
+        elif depth == 0 and masked[i : i + 3].upper() == "AND" and (
+            i == 0 or not (masked[i - 1].isalnum() or masked[i - 1] == "_")
         ) and (
-            i + 3 >= n or not (cond[i + 3].isalnum() or cond[i + 3] == "_")
+            i + 3 >= n or not (masked[i + 3].isalnum() or masked[i + 3] == "_")
         ):
             parts.append(cond[start:i])
             i += 3
@@ -10837,38 +10647,6 @@ def _resolve_alias_source(sql_before: str, alias: str) -> str | None:
     return None
 
 
-def _outside_strings(sql: str, pos: int) -> bool:
-    """True iff ``pos`` is not inside a quoted span.  Replaces the old
-    ``count("'") % 2`` parity trick, which miscounted doubled-quote
-    escapes (``'it''s'``) and backslash escapes (round-6 verdict #3)."""
-    i = 0
-    while i < pos:
-        if sql[i] in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
-            if i > pos:
-                return False
-            continue
-        i += 1
-    return True
-
-
-def _depth_at(sql: str, pos: int) -> int:
-    """Paren depth of ``pos`` (string-aware forward scan)."""
-    depth = 0
-    i = 0
-    while i < pos:
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    return depth
-
-
 def _hide_helpers_from_stars(sql: str, pos: int, ralias: str, helpers: list[str]) -> str:
     """Attach ``EXCEPT (…)`` to the owning SELECT's star items so the ASOF
     match-table helper columns (``__asof_lts``/``__asof_k*``) never leak
@@ -10878,19 +10656,20 @@ def _hide_helpers_from_stars(sql: str, pos: int, ralias: str, helpers: list[str]
     depth; its ``*`` and ``{ralias}.*`` items (including ones that already
     carry an EXCEPT list) get the qualified helper names merged in.  A
     select list with no star needs no hiding."""
-    tgt_depth = _depth_at(sql, pos)
+    depth_at = paren_depth(sql)
+    tgt_depth = depth_at(pos)
     sel = None
     for m in re.finditer(r"(?i)\bSELECT\b", sql):
         if m.start() >= pos:
             break
-        if _depth_at(sql, m.start()) == tgt_depth:
+        if depth_at(m.start()) == tgt_depth:
             sel = m
     if sel is None:
         return sql
     # select list runs to the owning FROM at the same depth
     from_m = None
     for m in re.finditer(r"(?i)\bFROM\b", sql):
-        if m.start() > sel.end() and _depth_at(sql, m.start()) == tgt_depth:
+        if m.start() > sel.end() and depth_at(m.start()) == tgt_depth:
             from_m = m
             break
     if from_m is None or from_m.start() > pos:
@@ -11299,21 +11078,19 @@ def _rewrite_ternary(sql: str) -> str:
     condition is typically parenthesized); the false branch runs to the
     matching boundary on the right.  ``::`` postfix casts are skipped;
     nested ternaries resolve by iterating (right-associative)."""
+    if "?" not in sql:
+        return sql
     while True:
-        qpos = None
-        for cand in re.finditer(r"\?", sql):
-            if _outside_strings(sql, cand.start()):
-                qpos = cand.start()
-                break
-        if qpos is None:
+        # scan the masked text: '?', ':', parens and words inside quoted
+        # spans are blanked there, at the same positions
+        masked = mask_strings(sql)
+        qpos = masked.find("?")
+        if qpos < 0:
             return sql
         # matching ':' to the right (skip nested '?' and '::')
         i, depth, nest, cpos = qpos + 1, 0, 0, None
-        while i < len(sql):
-            ch = sql[i]
-            if ch in _QUOTE_CHARS:
-                i = _skip_quoted(sql, i)
-                continue
+        while i < len(masked):
+            ch = masked[i]
             if ch in "([":
                 depth += 1
             elif ch in ")]":
@@ -11323,7 +11100,7 @@ def _rewrite_ternary(sql: str) -> str:
             elif ch == "?" and depth == 0:
                 nest += 1
             elif ch == ":" and depth == 0:
-                if sql[i : i + 2] == "::" or (i > 0 and sql[i - 1] == ":"):
+                if masked[i : i + 2] == "::" or (i > 0 and masked[i - 1] == ":"):
                     i += 1
                     continue
                 if nest == 0:
@@ -11337,14 +11114,7 @@ def _rewrite_ternary(sql: str) -> str:
         j, depth = qpos - 1, 0
         start = 0
         while j >= 0:
-            ch = sql[j]
-            if ch in "\"'`":
-                # walk back over the quoted span conservatively
-                j2 = j - 1
-                while j2 >= 0 and sql[j2] != ch:
-                    j2 -= 1
-                j = j2 - 1
-                continue
+            ch = masked[j]
             if ch in ")]":
                 depth += 1
             elif ch in "([":
@@ -11356,7 +11126,7 @@ def _rewrite_ternary(sql: str) -> str:
                 start = j + 1
                 break
             elif depth == 0 and (ch.isalpha() or ch == "_"):
-                w = re.search(r"[A-Za-z_]\w*$", sql[: j + 1])
+                w = re.search(r"[A-Za-z_]\w*$", masked[: j + 1])
                 if w and w.group(0).lower() in _TERNARY_STOP:
                     start = j + 1
                     break
@@ -11366,12 +11136,9 @@ def _rewrite_ternary(sql: str) -> str:
             start = 0
         # false-branch end: scan right to the boundary
         i, depth = cpos + 1, 0
-        end = len(sql)
-        while i < len(sql):
-            ch = sql[i]
-            if ch in _QUOTE_CHARS:
-                i = _skip_quoted(sql, i)
-                continue
+        end = len(masked)
+        while i < len(masked):
+            ch = masked[i]
             if ch in "([":
                 depth += 1
             elif ch in ")]":
@@ -11383,7 +11150,7 @@ def _rewrite_ternary(sql: str) -> str:
                 end = i
                 break
             elif depth == 0 and (ch.isalpha() or ch == "_"):
-                m2 = re.compile(r"[A-Za-z_]\w*").match(sql, i)
+                m2 = re.compile(r"[A-Za-z_]\w*").match(masked, i)
                 if m2 and m2.group(0).lower() in _TERNARY_STOP:
                     end = i
                     break
@@ -11407,19 +11174,13 @@ def _bare_tuple_parts(expr: str) -> list[str] | None:
         return None
     inner = e[1:-1]
     depth = 0
-    i, n = 0, len(inner)
-    while i < n:  # the outer parens must wrap the WHOLE expression
-        ch = inner[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(inner, i)
-            continue
+    for ch in mask_strings(inner):  # the outer parens must wrap the WHOLE expression
         if ch in "([":
             depth += 1
         elif ch in ")]":
             depth -= 1
             if depth < 0:
                 return None
-        i += 1
     if depth != 0:
         return None
     parts = _split_args(inner)
@@ -11473,27 +11234,6 @@ def _tuple_literal_struct(expr: str) -> str | None:
     return _struct_of([_tuple_literal_struct(p) or p for p in parts])
 
 
-def _paren_open_for(sql: str, close: int) -> int | None:
-    """Position of the ``(`` matching the ``)`` at ``close``
-    (string-aware forward scan), else None."""
-    stack: list[int] = []
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if ch in _QUOTE_CHARS:
-            i = _skip_quoted(sql, i)
-            continue
-        if ch == "(":
-            stack.append(i)
-        elif ch == ")":
-            if i == close:
-                return stack[-1] if stack else None
-            if stack:
-                stack.pop()
-        i += 1
-    return None
-
-
 def _rewrite_tuple_literal_access(sql: str) -> str:
     """Bare tuple LITERALS under positional access — ``(1,'a').2`` —
     become ``named_struct('_1', …)`` so the ``._N`` rewrite that follows
@@ -11507,7 +11247,7 @@ def _rewrite_tuple_literal_access(sql: str) -> str:
             if not _outside_strings(sql, m.start()):
                 continue
             close = m.start()
-            open_pos = _paren_open_for(sql, close)
+            open_pos = _paren_partners(sql).get(close)
             if open_pos is None:
                 continue
             k = open_pos - 1
@@ -11565,20 +11305,6 @@ def _rewrite_limit_ties(sql: str) -> str:
     inserted before the owning ORDER BY — the existing QUALIFY machinery
     (which runs right after this pass) does the subquery wrap."""
 
-    def depth_at(pos: int) -> int:
-        d, i = 0, 0
-        while i < pos:
-            ch = sql[i]
-            if ch in _QUOTE_CHARS:
-                i = _skip_quoted(sql, i)
-                continue
-            if ch == "(":
-                d += 1
-            elif ch == ")":
-                d -= 1
-            i += 1
-        return d
-
     while True:
         m = None
         for cand in re.finditer(r"(?is)\bLIMIT\s+(\d+)\s+WITH\s+TIES\b", sql):
@@ -11587,6 +11313,7 @@ def _rewrite_limit_ties(sql: str) -> str:
                 break
         if m is None:
             break
+        depth_at = paren_depth(sql)
         d = depth_at(m.start())
         om = None
         for oc in re.finditer(r"(?is)\bORDER\s+BY\b", sql[: m.start()]):
@@ -12078,14 +11805,11 @@ def _rewrite_limit_offset(sql: str) -> str:
     sequence `LIMIT int, int` cannot occur in any other SQL context —
     excluding only string literals; `LIMIT n BY cols` was already
     rewritten away before this runs."""
-    parts = re.split(r"('(?:[^']|'')*')", sql)
-    for j in range(0, len(parts), 2):
-        parts[j] = re.sub(
-            r"(?is)\bLIMIT\s+(\d+)\s*,\s*(\d+)",
-            lambda m: f"LIMIT {m.group(2)} OFFSET {m.group(1)}",
-            parts[j],
-        )
-    return "".join(parts)
+    return sub_code(
+        r"(?is)\bLIMIT\s+(\d+)\s*,\s*(\d+)",
+        lambda m: f"LIMIT {m.group(2)} OFFSET {m.group(1)}",
+        sql,
+    )
 
 
 def _rewrite_scalar_with(sql: str) -> str:
@@ -12104,15 +11828,13 @@ def _rewrite_scalar_with(sql: str) -> str:
     items = []  # (expr, ident) or None for CTE items
     raw_items = []
     n = len(sql)
+    masked = mask_strings(sql)
     while True:
         # scan one comma-separated item at depth 0
         start = i
         depth = 0
         while i < n:
-            ch = sql[i]
-            if ch in _QUOTE_CHARS:
-                i = _skip_quoted(sql, i)
-                continue
+            ch = masked[i]
             if ch == "(":
                 depth += 1
             elif ch == ")":
@@ -12121,8 +11843,8 @@ def _rewrite_scalar_with(sql: str) -> str:
                 break
             elif (
                 depth == 0
-                and re.match(r"(?is)SELECT\b", sql[i:])
-                and (i == 0 or not re.match(r"[A-Za-z0-9_]", sql[i - 1]))
+                and re.match(r"(?is)SELECT\b", masked[i:])
+                and (i == 0 or not re.match(r"[A-Za-z0-9_]", masked[i - 1]))
             ):
                 break
             i += 1
@@ -12149,14 +11871,11 @@ def _rewrite_scalar_with(sql: str) -> str:
     def _subst(text: str) -> str:
         for expr, ident in scalars:
             # substitute outside string literals, word-boundary
-            parts = re.split(r"('(?:[^']|'')*')", text)
-            for j in range(0, len(parts), 2):
-                parts[j] = re.sub(
-                    rf"(?<![A-Za-z0-9_]){re.escape(ident)}(?![A-Za-z0-9_])",
-                    f"({expr})",
-                    parts[j],
-                )
-            text = "".join(parts)
+            text = sub_code(
+                rf"(?<![A-Za-z0-9_]){re.escape(ident)}(?![A-Za-z0-9_])",
+                f"({expr})",
+                text,
+            )
         return text
 
     body = _subst(body)
@@ -12176,44 +11895,14 @@ def _rewrite_double_quoted_identifiers(sql: str) -> str:
     pass sees backticked identifiers and no bare double quotes outside
     strings."""
     out: list[str] = []
-    i, n = 0, len(sql)
-    in_sq = False
-    while i < n:
-        ch = sql[i]
-        if in_sq:
-            out.append(ch)
-            if ch == "'" and sql[i - 1] != "\\":
-                in_sq = False
-            i += 1
-            continue
-        if ch == "'":
-            in_sq = True
-            out.append(ch)
-            i += 1
-            continue
-        if ch == '"':
-            j = i + 1
-            ident: list[str] = []
-            closed = False
-            while j < n:
-                if sql[j] == '"':
-                    if j + 1 < n and sql[j + 1] == '"':
-                        ident.append('"')
-                        j += 2
-                        continue
-                    closed = True
-                    break
-                ident.append(sql[j])
-                j += 1
-            if not closed:  # unbalanced — leave as-is, the engine will say so
-                out.append(ch)
-                i += 1
-                continue
-            out.append("`" + "".join(ident).replace("`", "``") + "`")
-            i = j + 1
-            continue
-        out.append(ch)
-        i += 1
+    last = 0
+    for start, end, closed in quoted_spans(sql):
+        # an unbalanced '"' is left as-is — the engine will say so
+        if sql[start] == '"' and closed:
+            ident = sql[start + 1 : end - 1].replace('""', '"')
+            out.append(sql[last:start] + "`" + ident.replace("`", "``") + "`")
+            last = end
+    out.append(sql[last:])
     return "".join(out)
 
 
@@ -12244,17 +11933,16 @@ def _rewrite_order_by_nulls(sql: str) -> str:
     window OVER (...) clauses.  Remaining documented delta: CH places
     NaN between the values and NULL in BOTH directions; Spark treats
     NaN as the largest double (same as CH only for ASC)."""
+    if not _ORDER_BY_PAT.search(sql):
+        return sql
+    masked = mask_strings(sql)
     out = []
     pos = 0
     while True:
-        m = _ORDER_BY_PAT.search(sql, pos)
-        if not m or not _outside_strings(sql, m.start()):
-            if not m:
-                out.append(sql[pos:])
-                return "".join(out)
-            out.append(sql[pos : m.end()])
-            pos = m.end()
-            continue
+        m = _ORDER_BY_PAT.search(masked, pos)
+        if not m:
+            out.append(sql[pos:])
+            return "".join(out)
         out.append(sql[pos : m.end()])
         # scan the key list: split on top-level commas, stop at a
         # depth-0 terminator keyword, a closing paren, or end-of-string
@@ -12264,10 +11952,7 @@ def _rewrite_order_by_nulls(sql: str) -> str:
         key_start = i
         keys: list[tuple[int, int]] = []
         while i < n:
-            ch = sql[i]
-            if ch in _QUOTE_CHARS:
-                i = _skip_quoted(sql, i)
-                continue
+            ch = masked[i]
             if ch in "([":
                 depth += 1
             elif ch in ")]":
@@ -12278,11 +11963,11 @@ def _rewrite_order_by_nulls(sql: str) -> str:
                 keys.append((key_start, i))
                 key_start = i + 1
             elif depth == 0 and ch.isalpha():
-                t = _ORDER_TERM.match(sql, i)
-                if t and (i == 0 or not (sql[i - 1].isalnum()
-                                         or sql[i - 1] == "_")):
+                t = _ORDER_TERM.match(masked, i)
+                if t and (i == 0 or not (masked[i - 1].isalnum()
+                                         or masked[i - 1] == "_")):
                     break
-                while i < n and (sql[i].isalnum() or sql[i] == "_"):
+                while i < n and (masked[i].isalnum() or masked[i] == "_"):
                     i += 1
                 continue
             i += 1

@@ -15,11 +15,18 @@ closes the `WITH … INSERT` CTE bypass) that needs no session, and a
 parser-backed gate (``check_read_only_plan``) that asks Spark's own SQL
 parser for the logical plan class and rejects anything that is not
 query-shaped — no regex false-negatives possible on that path.
+
+Comment stripping and string masking follow the one rule set in
+:mod:`mcp_clickhouse_spark.sqltext` (escapes, comment forms), the same one
+the dialect translator reads the text with, so the gate and the translator
+always agree on where a literal ends.
 """
 
 from __future__ import annotations
 
 import re
+
+from mcp_clickhouse_spark.sqltext import mask_strings, strip_comments
 
 _ALLOWED_FIRST = {
     "select",
@@ -78,58 +85,6 @@ _FORBIDDEN_ANYWHERE_FIRST = {
     "exchange",
     "undrop",
 }
-
-
-def strip_comments(sql: str) -> str:
-    """Remove -- line and /* block */ comments (string-literal aware)."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    in_str: str | None = None
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            out.append(ch)
-            if ch == in_str and not (i > 0 and sql[i - 1] == "\\"):
-                in_str = None
-            i += 1
-            continue
-        if ch in ("'", '"', "`"):
-            in_str = ch
-            out.append(ch)
-            i += 1
-            continue
-        if ch == "-" and sql.startswith("--", i):
-            j = sql.find("\n", i)
-            i = n if j == -1 else j
-            continue
-        if ch == "/" and sql.startswith("/*", i):
-            j = sql.find("*/", i + 2)
-            i = n if j == -1 else j + 2
-            out.append(" ")
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def mask_strings(sql: str) -> str:
-    """Blank out string-literal contents (keeps quotes) for safe lexical
-    analysis — a ';' or keyword inside a literal must not influence
-    classification."""
-    out: list[str] = []
-    in_str: str | None = None
-    for i, ch in enumerate(sql):
-        if in_str:
-            if ch == in_str and not (i > 0 and sql[i - 1] == "\\"):
-                in_str = None
-                out.append(ch)
-            else:
-                out.append(" ")
-            continue
-        if ch in ("'", '"', "`"):
-            in_str = ch
-        out.append(ch)
-    return "".join(out)
 
 
 def _analysis_text(sql: str) -> str:

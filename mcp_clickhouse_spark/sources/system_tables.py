@@ -27,7 +27,7 @@ import re as _re
 
 from pyspark.sql import SparkSession
 
-from mcp_clickhouse_spark.dialect import _outside_strings
+from mcp_clickhouse_spark.sqltext import outside_strings
 
 _SYSTEM_RE = _re.compile(r"(?i)\bsystem\s*\.\s*(one|numbers|numbers_mt|tables|databases|columns|functions|settings|processes)\b")
 
@@ -38,7 +38,7 @@ def bind_system_tables(spark: SparkSession, sql: str) -> str:
     """Rewrite ``system.<t>`` references to bound temp views (no-op when
     the query mentions none)."""
     hits = [
-        m for m in _SYSTEM_RE.finditer(sql) if _outside_strings(sql, m.start())
+        m for m in _SYSTEM_RE.finditer(sql) if outside_strings(sql, m.start())
     ]
     if not hits:
         return sql

@@ -581,6 +581,13 @@ def test_extract_settings_edge_cases():
     sql, st = extract_settings("SELECT 'FORMAT JSON'")
     assert sql == "SELECT 'FORMAT JSON'" and st == {}
 
+    # a backslash-escaped quote does not end the literal
+    sql, st = extract_settings(
+        r"SELECT 'it\'s' AS s FROM t SETTINGS max_execution_time=5"
+    )
+    assert sql == r"SELECT 'it\'s' AS s FROM t"
+    assert st == {"max_execution_time": "5"}
+
 
 def test_join_modifier_rewrites_execute(spark):
     """GLOBAL drops (Spark plans distribution itself); ARRAY JOIN becomes
@@ -1583,6 +1590,13 @@ def test_double_quoted_identifiers_are_identifiers(spark):
     assert translate('SELECT "odd""name" FROM t') == 'SELECT `odd"name` FROM t'
     # double quotes INSIDE single-quoted strings stay literal
     assert translate("SELECT 'he said \"hi\"' AS s") == "SELECT 'he said \"hi\"' AS s"
+    # a literal ending in an escaped backslash closes at its quote, so the
+    # double-quoted name after it is still an identifier
+    assert translate(r"""SELECT 'C:\\' AS p, "x" FROM t""") == (
+        r"SELECT 'C:\\' AS p, `x` FROM t"
+    )
+    row = one(spark, r"""SELECT 'C:\\' AS p, "n_name" FROM nation WHERE n_nationkey = 3""")
+    assert row[0] == "C:\\" and row[1] != "n_name"
 
 
 def test_chained_and_nested_join_rewrites(spark):

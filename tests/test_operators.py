@@ -87,6 +87,9 @@ def test_dialect_settings_format_stripped(spark):
     assert t.strip() == "SELECT 1 AS a"
     t2 = translate("SELECT count(*) FROM t SETTINGS max_threads=8 FORMAT JSON")
     assert "SETTINGS" not in t2 and "FORMAT" not in t2
+    # SETTINGS inside a literal (closed after its escaped quote) is data
+    q = r"SELECT 'a\' SETTINGS max_execution_time=1' AS s FROM t"
+    assert translate(q) == q
 
 
 def test_with_fill(spark):

@@ -48,12 +48,15 @@ def test_select_decoration_stable(deco, tail):
     check_read_only("".join(deco) + base)
 
 
-@given(payload=st.text(alphabet="abc;DROP TABLE x'\"-/*", max_size=40))
+@given(payload=st.text(alphabet="abc;DROP TABLE x'\"-/*\\", max_size=40),
+       verb=st.sampled_from(WRITE_KEYWORDS))
 @settings(max_examples=200, deadline=None)
-def test_string_literals_never_trigger(payload):
-    # anything inside a correctly-escaped string literal is data, not SQL
+def test_string_literals_never_trigger(payload, verb):
+    # anything inside a correctly-escaped string literal is data, not SQL —
+    # and the literal must end where its escapes say, so a write keyword in
+    # the next literal stays data too
     lit = payload.replace("\\", "\\\\").replace("'", "\\'")
-    check_read_only(f"SELECT '{lit}' AS s")
+    check_read_only(f"SELECT '{lit}' AS s, '{verb}' AS v")
 
 
 # --- dialect expression-tree fuzz ------------------------------------------

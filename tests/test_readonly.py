@@ -23,6 +23,9 @@ from mcp_clickhouse_spark.readonly import ReadOnlyViolation, check_read_only
         "/* block */ SELECT 1",
         "SELECT 1;",  # trailing semicolon ok
         "SELECT '; DROP TABLE users' AS s",  # write keyword inside a string
+        # an escaped backslash ends the literal at the next quote, so the
+        # second literal stays data
+        r"SELECT 'C:\\' AS p, 'drop' AS verb",
     ],
 )
 def test_allowed(sql):
@@ -60,6 +63,9 @@ def test_allowed(sql):
         "WITH s AS (SELECT 1 AS x) UPDATE t SET a = 1",
         "WITH s AS (SELECT 1) MERGE INTO t USING s ON t.id = s.x WHEN MATCHED THEN DELETE",
         "EXPLAIN WITH s AS (SELECT 1) INSERT INTO t SELECT * FROM s",
+        # the literal closes after the escaped backslash: the ';' and the
+        # DROP after it are SQL, not string contents
+        r"SELECT 'a\\'; DROP TABLE t",
     ],
 )
 def test_rejected(sql):
