@@ -11,7 +11,19 @@ Field mapping (reference mcp_clickhouse/mcp_server.py:26-55):
   total_marks            → None (no mark index in Spark)
 
 The reference's N+1 per-table column query loop (:246-258) is collapsed:
-one listColumns call per table on the page only (§4.1 'improve').
+one column read per table on the page only (§4.1 'improve').
+
+Every read here runs on the driver and launches no Spark job.  PySpark's
+``Catalog.listDatabases/listTables/listColumns/listFunctions`` walk the
+JVM catalog Dataset with ``toLocalIterator()``, which runs one job per
+partition (2-11 jobs and 100-200 ms per call); the catalog is metadata,
+not analytics, so the listings come from SQL commands instead (``SHOW
+DATABASES``, ``SHOW TABLES IN``: executed eagerly on the driver, their
+result a local relation), and the columns from collecting the JVM
+``listColumns`` Dataset, a ``LocalRelation`` whose collect reads its rows
+in place.  Values are the same as the ``spark.catalog`` route's
+(``tests/test_catalog_jobs.py`` pins both).  A name taken from a tool
+argument enters a SQL command backtick-quoted (:func:`quote_ident`).
 """
 
 from __future__ import annotations
@@ -19,7 +31,7 @@ from __future__ import annotations
 from dataclasses import asdict, dataclass, field
 from typing import Any, List, Optional
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass
@@ -62,19 +74,40 @@ class Table:
         return d
 
 
+def quote_ident(name: str) -> str:
+    """One backtick-quoted SQL identifier, inner backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def list_database_names(spark: SparkSession) -> list[str]:
-    return [db.name for db in spark.catalog.listDatabases()]
+    return [r[0] for r in spark.sql("SHOW DATABASES").collect()]
+
+
+def list_tables_in(
+    spark: SparkSession, database: str | None = None
+) -> list[tuple[str, bool]]:
+    """``(name, is_temporary)`` of every table and view in ``database``
+    (the current one when None), session temp views included — the rows
+    ``spark.catalog.listTables`` returns, in its order."""
+    sql = "SHOW TABLES" if database is None else f"SHOW TABLES IN {quote_ident(database)}"
+    return [(r[1], r[2]) for r in spark.sql(sql).collect()]
 
 
 def list_table_names(spark: SparkSession, database: str) -> list[str]:
     # Temp views live in the session namespace; global catalog tables under
     # their database. The reference's system.tables scan (:188) maps to both.
-    tables = spark.catalog.listTables(database)
-    return sorted(tb.name for tb in tables)
+    return sorted(name for name, _ in list_tables_in(spark, database))
+
+
+def _list_columns(spark: SparkSession, qualified: str) -> list:
+    """The rows of ``spark.catalog.listColumns(qualified)`` (name,
+    description, dataType, …), collected on the driver."""
+    jds = spark._jsparkSession.catalog().listColumns(qualified)
+    return DataFrame(jds.toDF(), spark).collect()
 
 
 def _show_create(spark: SparkSession, database: str, name: str) -> str:
-    for qualified in (f"{database}.{name}", name):
+    for qualified in (f"{quote_ident(database)}.{quote_ident(name)}", quote_ident(name)):
         try:
             return spark.sql(f"SHOW CREATE TABLE {qualified}").collect()[0][0]
         except Exception:
@@ -93,20 +126,34 @@ def _attach_stats(
     from catalog statistics (populated by ANALYZE TABLE … COMPUTE
     STATISTICS), parts/active_parts = backing file count. Best-effort —
     temp views over in-memory frames have none of these.  ``is_temp``
-    skips the db-qualified attempts that are GUARANTEED to throw for a
-    temp view (each thrown Spark exception is a full analysis + Py4J
-    round-trip — the system.tables sweep over a long session's hundreds
-    of views paid ~6 of them per view, round 17)."""
+    skips ``DESCRIBE EXTENDED``, which prints only the schema for a temp
+    view, and the db-qualified attempts that are GUARANTEED to throw for
+    one (each thrown Spark exception is a full analysis + Py4J round-trip
+    — the system.tables sweep over a long session's hundreds of views
+    paid ~6 of them per view, round 17).  Only the rows after
+    ``# Detailed Table Information`` are table properties: the schema
+    rows above it carry column names, and a column named ``Provider``
+    must not become the engine."""
     import re as _re
 
     provider = num_buckets = None
-    for qualified in ((name,) if is_temp else (f"{database}.{name}", name)):
+    qualifieds = () if is_temp else (
+        f"{quote_ident(database)}.{quote_ident(name)}", quote_ident(name)
+    )
+    for qualified in qualifieds:
         try:
             rows = spark.sql(f"DESCRIBE EXTENDED {qualified}").collect()
         except Exception:
             continue
+        in_detail = False
         for r in rows:
-            if r[0] == "Statistics":
+            if r[0].startswith("#"):
+                if in_detail:
+                    break
+                in_detail = r[0] == "# Detailed Table Information"
+            elif not in_detail:
+                continue
+            elif r[0] == "Statistics":
                 m = _re.search(r"(\d+)\s+bytes(?:,\s*(\d+)\s+rows)?", r[1] or "")
                 if m:
                     table.total_bytes = int(m.group(1))
@@ -174,21 +221,18 @@ def describe_table(spark: SparkSession, database: str, name: str) -> Table:
     cols = []
     for qualified in ((name,) if is_temp else (f"{database}.{name}", name)):
         try:
-            cols = spark.catalog.listColumns(qualified)
+            cols = _list_columns(spark, qualified)
             break
         except Exception:
             continue
-    try:
-        table.columns = [
-            Column(
-                database=database,
-                table=name,
-                name=c.name,
-                column_type=c.dataType,
-                comment=c.description,
-            )
-            for c in cols
-        ]
-    except Exception:
-        table.columns = []
+    table.columns = [
+        Column(
+            database=database,
+            table=name,
+            name=c.name,
+            column_type=c.dataType,
+            comment=c.description,
+        )
+        for c in cols
+    ]
     return table

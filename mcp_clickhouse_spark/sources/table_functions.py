@@ -24,6 +24,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mcp_clickhouse_spark.catalog import list_tables_in
 from mcp_clickhouse_spark.sqltext import find_balanced, outside_strings, split_args
 
 # ClickHouse format name → (spark format, reader options)
@@ -375,7 +376,7 @@ def bind_sql_table_functions(spark: SparkSession, sql: str) -> str:
         ).hexdigest()[:12]
         # Registering the same deterministic name twice is a no-op
         # behaviorally; skip the reader round-trip when it exists.
-        if not any(v.name == view for v in spark.catalog.listTables() if v.isTemporary):
+        if (view, True) not in list_tables_in(spark):
             if fname == "numbers":
                 if len(args) == 1:
                     df = spark.range(int(args[0]))
@@ -432,9 +433,9 @@ def bind_sql_table_functions(spark: SparkSession, sql: str) -> str:
                     db, rx = args[0], args[1]
                 pat_t = _re.compile(rx)
                 matches = sorted(
-                    (t.name, t.isTemporary)
-                    for t in spark.catalog.listTables(db)
-                    if pat_t.search(t.name)
+                    (n, is_tmp)
+                    for n, is_tmp in list_tables_in(spark, db)
+                    if pat_t.search(n)
                 )
                 if not matches:
                     raise ValueError(

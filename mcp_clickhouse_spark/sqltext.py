@@ -10,7 +10,10 @@ Quoted spans
     unescaped copy of the same character.  Two escapes keep a span open:
 
     - a backslash escapes the next character (``'it\\'s'``, ``'C:\\\\'``)
-      inside ``'`` and ``"`` spans — never inside backticks;
+      inside ``'`` and ``"`` spans — never inside backticks, and never
+      inside a Spark raw literal (``r'…'``, ``R"…"``: an ``r``/``R``
+      directly before the quote that does not end a longer identifier,
+      so ``r'a\\'`` is closed and ``attr'…'`` is not raw);
     - a doubled quote (``''``, ``""``, doubled backticks) stands for one
       literal quote, in all three.
 
@@ -40,15 +43,26 @@ QUOTE_CHARS = ("'", '"', "`")
 _QUOTE_RE = re.compile(r"['\"`]")
 
 
+def _is_raw_prefix(s: str, i: int) -> bool:
+    """``s[i - 1]`` is a lone ``r``/``R``: the quote at ``i`` opens a Spark
+    raw literal."""
+    return (
+        i >= 1
+        and s[i - 1] in "rR"
+        and not (i >= 2 and (s[i - 2].isalnum() or s[i - 2] == "_"))
+    )
+
+
 def _close_of(s: str, i: int) -> int:
     """``s[i]`` opens a quoted span — index of its closing quote, or -1
     when the span is unterminated."""
     q = s[i]
     n = len(s)
+    escapes = q != "`" and not _is_raw_prefix(s, i)
     j = i + 1
     while j < n:
         ch = s[j]
-        if ch == "\\" and q != "`":
+        if ch == "\\" and escapes:
             j += 2
             continue
         if ch == q:

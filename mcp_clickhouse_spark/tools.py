@@ -183,7 +183,7 @@ def _execute(spark: SparkSession, query: str, dialect: str = "spark") -> DataFra
     # ClickHouse-style table functions in FROM position (file/url/s3/hdfs/
     # sqlite/numbers — chdb_prompt.py:28-60) bind to views/inline rewrites
     # BEFORE dialect translation, in both dialects (Spark SQL has none).
-    from mcp_clickhouse_spark.sources.system_tables import bind_system_tables
+    from mcp_clickhouse_spark.sources.system_tables import bind_system_tables, local_frame
     from mcp_clickhouse_spark.sources.table_functions import bind_sql_table_functions
 
     # CH SHOW PROCESSLIST == SELECT * FROM system.processes (round 17,
@@ -223,16 +223,14 @@ def _execute(spark: SparkSession, query: str, dialect: str = "spark") -> DataFra
                     ok = spark.catalog.tableExists(name)
                 except Exception:  # noqa: BLE001 — malformed name → 0
                     ok = False
-            return spark.createDataFrame(
-                [(1 if ok else 0,)], "result tinyint"
-            )
+            return local_frame(spark, [(1 if ok else 0,)], "result tinyint")
 
         ms = re.match(r"(?is)^\s*EXPLAIN\s+SYNTAX\b", query)
         if ms:
             # CH EXPLAIN SYNTAX shows the rewritten query — here, the
             # Spark SQL the dialect layer produces (round 7)
-            return spark.createDataFrame(
-                [(translate(query[ms.end() :]).strip(),)], "query string"
+            return local_frame(
+                spark, [(translate(query[ms.end() :]).strip(),)], "query string"
             )
         query = translate(query)
         # Python-UDF-backed helpers (murmurHash3_64, hypothesis-test

@@ -26,6 +26,10 @@ from mcp_clickhouse_spark.readonly import ReadOnlyViolation, check_read_only
         # an escaped backslash ends the literal at the next quote, so the
         # second literal stays data
         r"SELECT 'C:\\' AS p, 'drop' AS verb",
+        # a raw literal takes no backslash escapes: r'a\' ends at its
+        # second quote, and 'drop' is the next literal
+        r"SELECT r'a\' AS p, 'drop' AS verb",
+        r'SELECT R"C:\" AS p, "drop" AS verb',
     ],
 )
 def test_allowed(sql):
@@ -66,6 +70,9 @@ def test_allowed(sql):
         # the literal closes after the escaped backslash: the ';' and the
         # DROP after it are SQL, not string contents
         r"SELECT 'a\\'; DROP TABLE t",
+        # ...and a raw literal closes at its first quote, backslash or not
+        r"SELECT r'a\'; DROP TABLE t",
+        r'SELECT R"x\"; DROP TABLE t',
     ],
 )
 def test_rejected(sql):
@@ -85,6 +92,25 @@ def test_rejected(sql):
 )
 def test_depth0_scan_no_false_positives(sql):
     check_read_only(sql)
+
+
+@pytest.mark.parametrize(
+    "sql, spans",
+    [
+        (r"SELECT r'a\', 'b'", [r"'a\'", "'b'"]),
+        (r'SELECT R"C:\", 1', [r'"C:\"']),
+        (r"SELECT r'it''s\'", [r"'it''s\'"]),
+        # an r that ends a longer identifier is no raw prefix: the
+        # backslash escapes the quote and the span runs on
+        (r"SELECT tr'a\', 'b'", [r"'a\', '", "'"]),
+        (r"SELECT _r'a\', 'b'", [r"'a\', '", "'"]),
+        (r"SELECT `r`'a\', 'b'", ["`r`", r"'a\', '", "'"]),
+    ],
+)
+def test_raw_literal_spans(sql, spans):
+    from mcp_clickhouse_spark.sqltext import quoted_spans
+
+    assert [sql[a:b] for a, b, _ in quoted_spans(sql)] == spans
 
 
 def test_replace_function_call_allowed():
@@ -110,3 +136,10 @@ def test_replace_table_still_rejected():
         check_read_only("REPLACE TABLE t AS SELECT 1")
     with pytest.raises(ReadOnlyViolation):
         check_read_only("WITH s AS (SELECT 1) DELETE FROM t WHERE 1=1")
+
+
+def test_raw_literal_does_not_hide_the_rest_from_the_translator():
+    from mcp_clickhouse_spark.dialect import translate
+
+    out = translate(r"SELECT r'a\' AS s, toUInt8(1) AS t")
+    assert out.startswith(r"SELECT r'a\' AS s, ") and "toUInt8" not in out
